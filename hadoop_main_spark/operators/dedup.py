@@ -572,10 +572,11 @@ def rhp_cosine_pairs(
     all-pairs joined. Output: (id_a, id_b, cosine), id_a < id_b.
 
     Input contract (FAIL-FAST, advice r11 #2): every vector must be a
-    non-null, all-elements-non-null array of exactly ``dim`` values —
-    the verify kernel raises ValueError on ragged/null embeddings
-    rather than silently dropping the pair (the pre-r11 expression
-    form yielded NULL cosine, filtered out). A malformed corpus is a
+    non-null, all-elements-non-null array of exactly ``dim`` finite
+    values — the kernels raise ValueError on ragged, null, NaN or
+    infinite embeddings rather than silently dropping the pair (the
+    pre-r11 expression form yielded NULL cosine, filtered out) or
+    flipping signature bits away from the oracle. A malformed corpus is a
     pipeline bug upstream; surfacing it beats hiding it.
 
     ``max_band_bucket`` (optimization r12, verdict-r11 #2) is the
@@ -616,8 +617,9 @@ def rhp_cosine_pairs(
         # lambdas never enter codegen — which priced the 64-bit capped
         # variant at 4x the 16-bit one (optimization r12; measured
         # 4.8 s vs 2.8 s at sf0.1 before this kernel). Band values are
-        # exact integer packs; NaN dots sign to 0 exactly like the
-        # SQL ``dot >= 0`` (numpy NaN>=0 is False too).
+        # exact integer packs. Non-finite inputs are rejected: Spark and
+        # DuckDB order NaN above every number, so SQL ``NaN >= 0`` is
+        # true where numpy's is false, and the bits would differ.
         import numpy as np
         import pyarrow as pa
 
@@ -644,6 +646,11 @@ def rhp_cosine_pairs(
             V = vecs.values.to_numpy(zero_copy_only=False).astype(
                 np.float64, copy=False
             )[off[0] : off[-1]].reshape(n, dim)
+            if not np.isfinite(V).all():
+                raise ValueError(
+                    "rhp_cosine_pairs: NaN or infinite embedding in the "
+                    "signature kernel — the corpus contract is finite vectors"
+                )
             acc = np.zeros((n, bits))
             for d in range(dim):
                 acc += V[:, d][:, None] * Wm[d][None, :]

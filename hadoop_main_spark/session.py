@@ -13,6 +13,21 @@ on local[N] for tests and on a large cluster unchanged:
   oracle and are cluster-location independent.
 - `nanosAsLong` so nanosecond parquet timestamps (events table) are
   readable; `hadoop_main_spark.tables` converts them properly.
+
+:func:`get_spark` also sets what a session must fix before it starts:
+
+- A codegen class cache of ``CODEGEN_CACHE_ENTRIES``. Spark's default
+  of 100 is below the working set of a query mix that re-runs a few
+  hundred distinct generated classes, so every repeat recompiled them
+  through Janino and HotSpot JIT-compiled each new class again.
+- On local masters only, ``spark.python.daemon.module`` names
+  :mod:`hadoop_main_spark.pydaemon`, which stops pyspark's per-task
+  ``importlib.invalidate_caches()`` from re-reading pyspark.zip, and
+  ``spark.executorEnv.PYTHONPATH`` holds the directory containing this
+  package, so the daemon and any UDF that imports the package load in
+  a session started from any working directory. ``extra_conf`` can
+  override both. On other masters both stay unset: executors run
+  pyspark's own daemon and must have the package installed.
 """
 
 from __future__ import annotations
@@ -64,6 +79,17 @@ RUNTIME_CONFS = {
 }
 
 
+#: Entries of Spark's compiled-class cache (static conf
+#: ``spark.sql.codegen.cache.maxEntries``, default 100). The widest
+#: query mix measured, perfbench's iter_stream_io, compiles 266
+#: distinct classes per pass; this leaves room for a mix several times
+#: wider.
+CODEGEN_CACHE_ENTRIES = 2000
+
+#: Directory that contains the ``hadoop_main_spark`` package.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -87,8 +113,13 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", "hadoop_main_spark.pydaemon"
+        ).config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():

@@ -45,18 +45,16 @@ def test_rhp_signature_kernel_matches_expression(spark, sf_dir):
         # and read the band values it would join on
         from hadoop_main_spark.operators import dedup as DD
 
-        captured = {}
-
-        def _capture(df_pairs_input=corpus, b=bits, bb=band_bits):
+        def _capture(bits, band_bits):
             pairs = DD.rhp_cosine_pairs(
-                df_pairs_input, "vec_id", "v", dim=64, bits=b, band_bits=bb,
+                corpus, "vec_id", "v", dim=64, bits=bits, band_bits=band_bits,
                 min_cosine=-2.0,  # keep every candidate: the pair set
                 # then depends ONLY on band equality, so equal band
                 # tables <=> equal pair sets
             )
             return {(r["id_a"], r["id_b"]) for r in pairs.collect()}
 
-        got_pairs = _capture()
+        got_pairs = _capture(bits, band_bits)
         # expected pairs from the expression-form band table
         exp_pairs = set()
         by_bucket: dict[tuple[int, int], list] = {}
@@ -95,6 +93,20 @@ def test_rhp_band_bucket_cap(spark):
     assert got == {(100, 101)}
     with pytest.raises(ValueError):
         rhp_cosine_pairs(df, "vec_id", "v", dim=64, max_band_bucket=0)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_rhp_signature_kernel_rejects_non_finite(spark, bad):
+    """The signature kernel fails fast on a NaN or infinite element:
+    SQL orders NaN above every number (``NaN >= 0`` is true) where
+    numpy's comparison is false, so the bit would silently differ
+    from the oracle's."""
+    from hadoop_main_spark.operators.dedup import rhp_cosine_pairs
+
+    rows = [(1, [1.0, 0.5, -0.25, 2.0] * 16), (2, [1.0, 0.5, -0.25, bad] * 16)]
+    df = spark.createDataFrame(rows, "vec_id bigint, v array<double>")
+    with pytest.raises(Exception, match="NaN or infinite embedding"):
+        rhp_cosine_pairs(df, "vec_id", "v", dim=64).collect()
 
 
 def _final_plan(df) -> str:

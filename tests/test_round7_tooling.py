@@ -181,3 +181,17 @@ def test_recall_gate_pure_logic(tmp_path, monkeypatch):
     got = {1: {2, 3}, 4: {5}}
     truth = {1: {2, 9}, 4: {5}}
     assert RG._recall(got, truth) == round(2 / 3, 4)
+
+
+def test_sweep_all_takes_out_path_only_from_flag():
+    import pytest
+    import sweep_all as SW
+
+    names = list(SW.REGISTRY)[:2]
+    args = SW.parse_args(names)
+    assert args.out == "/tmp/sweep_all.json" and args.queries == names
+    args = SW.parse_args(["--out", "x.json", "--runs", "3", names[0]])
+    assert (args.out, args.runs, args.queries) == ("x.json", 3, names[:1])
+    assert SW.parse_args([]).queries == list(SW.REGISTRY)
+    with pytest.raises(SystemExit):
+        SW.parse_args(["ledger.json", names[0]])  # not a query name

@@ -3,15 +3,16 @@
 Times EVERY registry query at $SPARK_GRAFT_SF_DIR (default sf0.1),
 build()+action (the r12 methodology — eager-checkpoint iterative
 queries do real compute in build()), min of N runs after one untimed
-warmup, and writes a ranked JSON ledger to the path given as argv[1]
+warmup, and writes a ranked JSON ledger to the path given by --out
 (default /tmp/sweep_all.json). Use to find the expensive registry
 tail beyond the bench headline set.
 
-Usage: python tools/sweep_all.py [out.json] [--runs N] [query ...]
+Usage: python tools/sweep_all.py [--out out.json] [--runs N] [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -30,15 +31,22 @@ def run_once(spark, name: str, sf_dir: str) -> float:
     return time.perf_counter() - t0
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", default="/tmp/sweep_all.json", help="JSON ledger path")
+    ap.add_argument("--runs", type=int, default=2, help="timed runs per query")
+    ap.add_argument("queries", nargs="*", help="registry names (default: all)")
+    args = ap.parse_args(argv)
+    unknown = [n for n in args.queries if n not in REGISTRY]
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
+    args.queries = args.queries or list(REGISTRY)
+    return args
+
+
 def main() -> None:
-    args = sys.argv[1:]
-    runs = 2
-    if "--runs" in args:
-        i = args.index("--runs")
-        runs = int(args[i + 1])
-        del args[i : i + 2]
-    out_path = args[0] if args else "/tmp/sweep_all.json"
-    names = args[1:] or list(REGISTRY)
+    args = parse_args()
+    runs, out_path, names = args.runs, args.out, args.queries
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("sweep-all")
     times: dict[str, float] = {}
