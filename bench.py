@@ -38,25 +38,14 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 BEST_LEDGER = os.path.join(_REPO, "BENCH_best.json")
 
 
-#: timing methodology (optimization r12, verdict-r11 #1): the timer
-#: covers build() + the noop action — iterative operators run real
-#: compute inside build() via EAGER localCheckpoint() (suffix
-#: prefix-doubling, CC rounds, OPQ/NN-descent training, streaming
-#: windows), so the old post-build t0 structurally under-reported
-#: them (the bench-flagged suffix_array_repeats ran its suffix-array
-#: construction untimed). SPARK_GRAFT_TIME_BUILD=0 restores the
-#: legacy action-only timing for cross-round comparison runs; the
-#: "timing" output field and the BENCH_best.json ledger key reflect
-#: whichever is active, so the two histories never mix.
-TIME_BUILD = os.environ.get("SPARK_GRAFT_TIME_BUILD", "1") != "0"
-
-
 def run_once(spark, name: str, sf_dir: str) -> float:
-    if not TIME_BUILD:  # legacy pre-r12 timing (action only)
-        df = REGISTRY[name].build(spark, sf_dir)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+    """Seconds for one build() + noop-write action of ``name`` — the
+    timed region of bench.py, tools/sweep_all.py and
+    tools/scale_gate.py (optimization r12, verdict-r11 #1): iterative
+    operators run real compute inside build() via EAGER
+    localCheckpoint() (suffix prefix-doubling, CC rounds,
+    OPQ/NN-descent training, streaming windows), so a timer started
+    after build() under-reports them."""
     t0 = time.perf_counter()
     df = REGISTRY[name].build(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
@@ -173,9 +162,9 @@ def main() -> None:
             noisy.append(name)
     total = round(sum(times.values()), 3)
     # ledger key versioned by timing methodology: build()+action times
-    # are not comparable to the pre-r12 action-only minima, so they
-    # accumulate under a separate key (old history stays untouched)
-    sf_key = f"sf{sf}+build" if TIME_BUILD else f"sf{sf}"
+    # are not comparable to the pre-r12 action-only minima kept under
+    # the plain sf key
+    sf_key = f"sf{sf}+build"
     best_entry = update_best_ledger(sf_key, times, total, noisy)
     # MRBench analog (JT/mapred/MRBench.java:201): tiny-job latency —
     # the scheduling+execution floor for a 1-row map/reduce round trip
@@ -209,7 +198,7 @@ def main() -> None:
                 "metric": "headline_queries_total_wall",
                 "value": total,
                 "unit": "sec",
-                "timing": "build+action" if TIME_BUILD else "action",
+                "timing": "build+action",
                 "queries": times,
                 "spread": spread,
                 "noisy": noisy,

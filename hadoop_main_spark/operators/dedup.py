@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hadoop_main_spark.functions.hashing import hash64, hash64_sql
+from hadoop_main_spark.operators.checkpoints import ckpt_rdd_id, run_checkpoint, unpersist_rdd
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 NUM_HASHES = 16
@@ -792,13 +793,6 @@ def connected_components(
     Returns (id, component) for every node appearing in ``pairs``,
     component = min node id reachable.
     """
-    from hadoop_main_spark.operators.checkpoints import ckpt_rdd_id as _ckpt_rdd_id
-
-    def _unpersist(rid: int) -> None:
-        from hadoop_main_spark.operators.checkpoints import unpersist_rdd
-
-        unpersist_rdd(pairs.sparkSession, rid)
-
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     und = (
         edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -811,7 +805,7 @@ def connected_components(
         .withColumn("component", F.col("id"))
         .localCheckpoint()
     )
-    prev_id = _ckpt_rdd_id(labels)  # the current frontier's blocks
+    prev_id = ckpt_rdd_id(labels)  # the current frontier's blocks
     prev_sum = None
     for _ in range(max_iter):
         neigh = und.join(
@@ -837,7 +831,7 @@ def connected_components(
                 prop.select(F.col("id"), F.col("component").alias("cc")), "id"
             ).select(F.col("src_id").alias("id"), F.col("cc").alias("component"))
         new_labels = cur.localCheckpoint(eager=False)
-        created = _ckpt_rdd_id(new_labels)
+        created = ckpt_rdd_id(new_labels)
         # convergence via the MONOTONE label sum: labels only ever
         # decrease (every step is a min), so an unchanged exact sum
         # == fixpoint — one aggregate action on the frame we must
@@ -847,7 +841,7 @@ def connected_components(
         lab_sum = new_labels.agg(
             F.sum(F.col("component").cast("decimal(38,0)")).alias("__s")
         ).first()["__s"]
-        _unpersist(prev_id)
+        unpersist_rdd(pairs.sparkSession, prev_id)
         prev_id = created
         labels = new_labels
         if lab_sum == prev_sum:
@@ -859,7 +853,7 @@ def connected_components(
     # all edges for the whole session. The FINAL frontier necessarily
     # stays persisted (it IS the returned data); it is the single
     # bounded block set a long-lived session retains per call.
-    _unpersist(_ckpt_rdd_id(und))
+    unpersist_rdd(pairs.sparkSession, ckpt_rdd_id(und))
     return labels
 
 
@@ -1212,31 +1206,27 @@ def prefix_jaccard_pairs(
     """
     if not (0 < t_num <= t_den):
         raise ValueError("threshold must satisfy 0 < t_num/t_den <= 1")
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
     from hadoop_main_spark.operators.partitioning import fan_out
 
     # the gram table feeds FOUR branches (frequency ranking, the
     # prefix projection, and both sides of the verify join) whose
     # differing pushdowns defeat exchange reuse — a lazy checkpoint
-    # runs the tokenize+explode once (supersede-released on rebuild).
+    # runs the tokenize+explode once (owned by the query run).
     # Materializing a corpus-sized frame is acceptable HERE because
     # the exact join is the moderate-scale / verification tool by
-    # contract (LSH is the 100 TB candidate path); pass a distinct
-    # tag per concurrently-live corpus. A caller that already built
-    # the distinct-gram table (see :func:`distinct_grams`; e.g.
-    # lsh_quality_eval shares it with the MinHash side) passes it via
-    # ``grams`` — the caller then owns the checkpoint lifecycle; NULL
-    # gram rows (gram-less docs) are filtered here, reproducing the
-    # non-outer explode this path builds for itself.
+    # contract (LSH is the 100 TB candidate path). A caller that
+    # already built the distinct-gram table (see :func:`distinct_grams`;
+    # e.g. lsh_quality_eval shares it with the MinHash side) passes it
+    # via ``grams`` — the caller then owns the checkpoint lifecycle;
+    # NULL gram rows (gram-less docs) are filtered here, reproducing
+    # the non-outer explode this path builds for itself.
     if grams is None:
-        grams = supersede_checkpoint(
-            "prefix_jaccard.grams",
+        grams = run_checkpoint(
             fan_out(df.select(id_col, text_col), [id_col])
             .select(
                 F.col(id_col).alias("__id"),
                 F.explode(F.array_distinct(word_shingles(text_col, n))).alias("g"),
             )
-            .localCheckpoint(eager=False),
         )
     else:
         grams = grams.filter(F.col("g").isNotNull()).select(
@@ -1466,7 +1456,7 @@ def edit_distance_join(
     s = docs.select(
         F.col(id_col).alias("__id"),
         F.substring(F.col(text_col), 1, prefix_len).alias("__s"),
-    ).filter(F.length("__s") >= q).localCheckpoint()
+    ).filter(F.length("__s") >= q).transform(run_checkpoint, eager=True)
     plen = q * max_dist + 1
     grams = s.select(
         "__id",

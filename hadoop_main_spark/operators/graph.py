@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_main_spark.operators.checkpoints import ckpt_rdd_id, run_checkpoint, unpersist_rdd
+
 
 def canonical_edges(df: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected edge list normalized to (a < b), self-loops dropped,
@@ -154,7 +156,7 @@ def bfs_distances(
             dist.unionByName(step)
             .groupBy("lm", "v")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+            .transform(run_checkpoint)
         )
     return dist
 
@@ -179,7 +181,8 @@ def kcore(
     WHOLE frontiers per round, so round count is bounded by the
     graph's degeneracy ordering depth, not node count (single-digit
     on web/token graphs). Frontier localCheckpoints per round with
-    superseded blocks released (the connected-components discipline).
+    superseded blocks released (the connected-components discipline);
+    the query run owns the surviving frontier.
 
     ``edges``: canonical (a < b) undirected, deduplicated (the
     :func:`canonical_edges` contract). Returns (v, core_degree) for
@@ -195,7 +198,6 @@ def kcore(
     the action that materializes its lazy checkpoint — one job per
     round total.
     """
-    from hadoop_main_spark.operators.checkpoints import ckpt_rdd_id, unpersist_rdd
 
     def degrees(e: DataFrame) -> DataFrame:
         return (
@@ -234,7 +236,7 @@ def kcore(
             cur.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=False)
+            .transform(run_checkpoint)
         )
         created = ckpt_rdd_id(nxt)
         n = nxt.count()  # materializes the lazy checkpoint

@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hadoop_main_spark.operators.checkpoints import run_checkpoint
+
 DEC_CENTROID = "decimal(27,7)"
 
 
@@ -2596,7 +2598,7 @@ def nndescent_knn_graph(
     # plan-matched by the cache manager into OTHER queries computing
     # the same subtree (the round-2 cache-hygiene advice) — the
     # connected_components discipline
-    nbr = nbr.localCheckpoint()
+    nbr = run_checkpoint(nbr, eager=True)
     for _ in range(iterations):
         rev = nbr.select(F.col("nbr").alias("id"), F.col("id").alias("nbr"))
         nn2 = (
@@ -2618,7 +2620,7 @@ def nndescent_knn_graph(
         out = scored.withColumn("rank", F.row_number().over(w)).filter(
             F.col("rank") <= k
         )
-        nbr = out.select("id", "nbr").localCheckpoint()
+        nbr = run_checkpoint(out.select("id", "nbr"), eager=True)
     return out.select(
         "id",
         F.col("rank").cast("bigint").alias("rank"),
@@ -2642,7 +2644,6 @@ def hierarchical_entry_pool(
     vec_col: str = "embedding",
     query_id: str = "query_id",
     qscale: int = PQ_QSCALE,
-    ckpt_tag: str | None = None,
 ) -> DataFrame:
     """HIERARCHICAL entry layer for graph search — the actual HNSW
     upper-layer idea (Malkov & Yashunin TPAMI'18 §4.2) in
@@ -2673,13 +2674,13 @@ def hierarchical_entry_pool(
     # (production persists layer graphs like any other index).
     # localCheckpoint, not persist — cache-manager plan-matching
     # would leak this subplan into other graph queries
-    g1 = nndescent_knn_graph(
-        sampled, l1_k, l1_iters, id_col, vec_col, qscale
-    ).localCheckpoint()
+    g1 = run_checkpoint(
+        nndescent_knn_graph(sampled, l1_k, l1_iters, id_col, vec_col, qscale),
+        eager=True,
+    )
     res1 = knn_graph_search(
         g1, sampled, queries, entries, l1_beam, l1_hops, l1_entries,
         id_col, vec_col, query_id, qscale,
-        ckpt_tag=None if ckpt_tag is None else f"{ckpt_tag}.l1",
     )
     return res1.select(query_id, F.col("neighbor_id").alias("node"))
 
@@ -2697,7 +2698,6 @@ def knn_graph_search(
     query_id: str = "query_id",
     qscale: int = PQ_QSCALE,
     entry_pool: DataFrame | None = None,
-    ckpt_tag: str | None = None,
 ) -> DataFrame:
     """Greedy BEAM SEARCH over a prebuilt k-NN graph — the query side
     of the graph-ANN paradigm (HNSW's layer-0 search, Malkov &
@@ -2757,10 +2757,8 @@ def knn_graph_search(
         "CAST(0 AS BIGINT), (s, x) -> s + x)"
     )
     w = Window.partitionBy(query_id).orderBy("d2", "node")
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
-
     scored = None
-    for h in range(hops):
+    for _ in range(hops):
         # each hop references `pool` TWICE (the neighbor expansion and
         # the union), so without a barrier the logical plan DOUBLES
         # per hop — ~2^hops copies of the entry subtree, and a nested
@@ -2770,23 +2768,13 @@ def knn_graph_search(
         # localCheckpoint materializes each hop's beam (queries x
         # beam rows) once per action and keeps the plan linear in
         # hops — the connected-components iteration discipline.
-        # ckpt_tag (advice r11 #1): hop blocks stay pinned after the
-        # action (lazy checkpoints cannot release mid-action — later
-        # hops read them). A caller that REBUILDS fresh before every
-        # execution (the registry query builders: bench/oracle/driver
-        # all build-then-execute-once) passes a stable per-site tag,
-        # and the next build under the same (tag, hop) releases the
-        # previous generation's blocks via supersede_checkpoint.
-        # The DEFAULT is None — NO release — because a caller may
-        # legitimately keep a search's OUTPUT in the lineage of the
-        # next search's INPUT (the HNSW insert pattern: edges :=
-        # edges ∪ search results); a stable tag there unpersists
-        # checkpoints a later plan still reads
-        # (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — caught by
-        # test_knn_graph_stream_insert_equals_sequential_batch).
-        pool = pool.localCheckpoint(eager=False)
-        if ckpt_tag is not None:
-            pool = supersede_checkpoint(f"{ckpt_tag}.hop{h}", pool)
+        # Hop blocks stay pinned after the action (lazy checkpoints
+        # cannot release mid-action — later hops read them); the query
+        # run owns them, and nothing is released inside a build, so a
+        # caller may keep a search's OUTPUT in the lineage of the next
+        # search's INPUT (the HNSW insert pattern: edges := edges ∪
+        # search results).
+        pool = run_checkpoint(pool)
         nbrs = pool.join(edges, pool["node"] == edges["id"]).select(
             query_id, F.col("nbr").alias("node")
         )
@@ -2840,7 +2828,6 @@ def knn_graph_search_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id: str = "query_id",
-    ckpt_tag: str | None = None,
 ) -> DataFrame:
     """Beam-search a materialized k-NN graph (see
     :func:`build_knn_graph_index`): the graph build is off the query
@@ -2849,8 +2836,7 @@ def knn_graph_search_indexed(
     g = spark.read.parquet(f"{path}/graph")
     nodes = spark.read.parquet(f"{path}/nodes")
     return knn_graph_search(
-        g, nodes, queries, k, beam, hops, entries, id_col, vec_col, query_id,
-        ckpt_tag=ckpt_tag,
+        g, nodes, queries, k, beam, hops, entries, id_col, vec_col, query_id
     )
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_main_spark.operators.checkpoints import run_checkpoint, run_tmpdir
 from hadoop_main_spark.plans.core_queries import _one, _price, _rate
 from hadoop_main_spark.plans.registry import query, t
 
@@ -1988,15 +1989,10 @@ def kcore_parts(spark: SparkSession, sf: str) -> DataFrame:
         .select("p.a", "p.b")
         .distinct()
     )
-    # lazy-checkpoint the edge list under a supersede tag (the
-    # triangle_count discipline — bench re-builds must not pin a new
-    # edge RDD per run) so neither the stats actions nor the peel
-    # rounds replay the basket explosion
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
-
-    edges = supersede_checkpoint(
-        "kcore_parts.edges", edges.localCheckpoint(eager=False)
-    )
+    # lazy-checkpoint the edge list (the triangle_count discipline) so
+    # neither the stats actions nor the peel rounds replay the basket
+    # explosion
+    edges = run_checkpoint(edges)
     # k = (5 * mean_degree) div 8 derives INSIDE kcore off round 0's
     # degree table — no separate edge/node counting pass
     core = kcore(edges, mean_frac=(5, 8))
@@ -2971,7 +2967,6 @@ def equi_depth_histogram(spark: SparkSession, sf: str) -> DataFrame:
     "maintenance cost is |delta| + |view|, never |base|.",
 )
 def incremental_agg_maintenance(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
 
     from hadoop_main_spark.operators.aggregate import merge_partial_aggs
     from hadoop_main_spark.sources.versioned import read_version, write_version
@@ -2991,7 +2986,7 @@ def incremental_agg_maintenance(spark: SparkSession, sf: str) -> DataFrame:
             F.max("event_id").alias("max_event_id"),
         )
 
-    snap = tempfile.mkdtemp(prefix="aggview_")
+    snap = run_tmpdir("aggview_")
     write_version(view(e.filter(F.pmod("event_id", F.lit(2)) == 0)), snap)
     stored = read_version(spark, snap)
     delta = view(e.filter(F.pmod("event_id", F.lit(2)) == 1))

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from hadoop_main_spark.functions.hashing import hash64, hash64_sql
 from hadoop_main_spark.operators import joins as J
 from hadoop_main_spark.operators import sessions as SES
+from hadoop_main_spark.operators.checkpoints import run_tmpdir
 from hadoop_main_spark.plans.registry import query, t
 
 _US_HOUR = 3_600_000_000
@@ -556,12 +557,9 @@ def count_min_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     "batch sketch — count_min_heavy_hitters' oracle verbatim, the "
     "sketch-mergeability invariant. A double-merged replay or a "
     "dropped batch moves a counter. BUILD-COST NOTE: this builder "
-    "EXECUTES the full streaming job at plan-build time. LOCAL-MODE "
-    "CONTRACT: tempfile.mkdtemp() sinks.",
+    "EXECUTES the full streaming job at plan-build time.",
 )
 def stream_sketch_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.functions.sketches import count_min_probe
     from hadoop_main_spark.operators.partitioning import fan_out
     from hadoop_main_spark.operators.transforms import tokenize
@@ -571,7 +569,7 @@ def stream_sketch_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = t(spark, sf, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="streamsk_")
+    base = run_tmpdir("streamsk_")
     src = f"{base}/src"
     docs.repartition(4).write.parquet(src)
     stream = (
@@ -1365,12 +1363,9 @@ def merge_upsert(spark: SparkSession, sf: str) -> DataFrame:
     "version 2 exists, which is the time-travel property itself. "
     "Certified by content: per (version, status), n_rows + the "
     "mod-2^61-1 row fingerprint; a stale read, a leaked tombstone, "
-    "or any cross-version contamination moves a row. LOCAL-MODE "
-    "CONTRACT: tempfile.mkdtemp() table root.",
+    "or any cross-version contamination moves a row.",
 )
 def versioned_time_travel(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.operators.aggregate import table_fingerprint
     from hadoop_main_spark.sources.versioned import (
         merge_version,
@@ -1404,7 +1399,7 @@ def versioned_time_travel(spark: SparkSession, sf: str) -> DataFrame:
         "o_orderpriority",
         (k % 13 == 0).alias("is_delete"),
     )
-    table = tempfile.mkdtemp(prefix="versioned_") + "/orders_tbl"
+    table = run_tmpdir("versioned_") + "/orders_tbl"
     v1 = write_version(target, table)
     v2 = merge_version(
         spark,

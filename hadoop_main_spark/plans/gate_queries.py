@@ -6,9 +6,9 @@ MultipleOutputs routing, the three explicit partitioners
 point lookup, and the counters framework — each with a closed-form
 DuckDB oracle, so every §2 operator has a green CORRECTNESS row.
 
-Fixture discipline: roundtrip queries write to tempfile.mkdtemp()
-(the seqfile/fixedwidth/csv precedent — a shared FS on a real
-cluster), and the oracle computes the same answer on the ORIGINAL
+Fixture discipline: roundtrip queries write to a run temp dir
+(``run_tmpdir``; the seqfile/fixedwidth/csv precedent — a shared FS
+on a real cluster), and the oracle computes the same answer on the ORIGINAL
 parquet, so the write→read machinery is what gets verified.
 
 The partitioner histograms compute the REFERENCE'S partition
@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_main_spark.operators.checkpoints import run_tmpdir
 from hadoop_main_spark.operators.partitioning import (
     java_long_hash_partition,
     java_long_hash_partition_sql,
@@ -59,15 +60,12 @@ def _h60() -> F.Column:
     "the SPLIT ARITHMETIC itself is verified — the number of "
     "partitions the reader actually produced (countDistinct of "
     "spark_partition_id captured before any shuffle) must equal "
-    "ceil(total/N) exactly, alongside lossless line count and id sum. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() write target.",
+    "ceil(total/N) exactly, alongside lossless line count and id sum.",
 )
 def nline_split_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.text import read_nline
 
-    out = tempfile.mkdtemp(prefix="nline_") + "/ids"
+    out = run_tmpdir("nline_") + "/ids"
     (
         t(spark, sf, "documents")
         .select(F.lpad(F.col("doc_id").cast("string"), 12, "0").alias("value"))
@@ -105,15 +103,12 @@ def nline_split_agg(spark: SparkSession, sf: str) -> DataFrame:
     "than files (a hard Python raise, not a hope), "
     "compact_small_files rewrites them into exactly one file, and "
     "the read-back aggregate must be lossless per language with the "
-    "file counts (64 -> 1) in the row. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() target.",
+    "file counts (64 -> 1) in the row.",
 )
 def combine_pack_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.sinks import compact_small_files
 
-    base = tempfile.mkdtemp(prefix="combine_")
+    base = run_tmpdir("combine_")
     small = f"{base}/small"
     (
         t(spark, sf, "documents")
@@ -160,17 +155,14 @@ def combine_pack_agg(spark: SparkSession, sf: str) -> DataFrame:
     "INDEPENDENTLY, and every route's row count, id sum, and "
     "order-independent 60-bit text checksum must equal the oracle's "
     "per-language aggregate on the original parquet — a row routed "
-    "to the wrong sink (or dropped, or duplicated) moves two rows. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() target.",
+    "to the wrong sink (or dropped, or duplicated) moves two rows.",
 )
 def multiple_outputs_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.sinks import multiple_outputs
 
     langs = ["de", "en", "es", "fr", "zh"]
     d = t(spark, sf, "documents").select("doc_id", "lang", "text")
-    base = tempfile.mkdtemp(prefix="multiout_")
+    base = run_tmpdir("multiout_")
     paths = multiple_outputs(
         d, {lg: F.col("lang") == lg for lg in langs}, base
     )
@@ -335,16 +327,13 @@ def binary_partition_hist(spark: SparkSession, sf: str) -> DataFrame:
     "midpoint) are fetched via mapfile_lookup — each lookup prunes to "
     "ONE bucket directory (partition filter) and skips row groups "
     "inside it — and the fetched rows must match the oracle's direct "
-    "selection byte-for-byte (text md5). LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() target.",
+    "selection byte-for-byte (text md5).",
 )
 def mapfile_point_lookup(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.layouts import mapfile_lookup, write_mapfile
 
     d = t(spark, sf, "documents").select("doc_id", "lang", "n_chars", "text")
-    path = tempfile.mkdtemp(prefix="mapfile_") + "/docs"
+    path = run_tmpdir("mapfile_") + "/docs"
     write_mapfile(d, path, key="doc_id", n_buckets=16)
     lo, hi = d.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
     kmid = d.filter(F.col("doc_id") > (lo + hi) // 2).agg(

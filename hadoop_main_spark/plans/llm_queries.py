@@ -15,6 +15,7 @@ from hadoop_main_spark.functions.hashing import hash64_sql
 from hadoop_main_spark.operators import dedup as D
 from hadoop_main_spark.operators import similarity as SIM
 from hadoop_main_spark.operators import textstats as TS
+from hadoop_main_spark.operators.checkpoints import run_checkpoint, run_tmpdir
 from hadoop_main_spark.plans.registry import query, t
 
 P = D.MINHASH_P
@@ -592,7 +593,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     # tripled the query (optimization r11: 3.6 s -> 1.9 s). Lazy, so
     # every action still computes the corpus fresh — the barrier only
     # shares it WITHIN the action.
-    corpus = corpus.localCheckpoint(eager=False)
+    corpus = run_checkpoint(corpus)
     return D.rhp_cosine_pairs(corpus, "vec_id", "v", dim=64, min_cosine=0.95)
 
 
@@ -658,7 +659,7 @@ _RHPC_CAP = 1000
 )
 def dedup_embedding_cosine_capped(spark: SparkSession, sf: str) -> DataFrame:
     corpus = _perturbed_corpus(t(spark, sf, "embeddings"))
-    corpus = corpus.localCheckpoint(eager=False)  # shared by sig + verify
+    corpus = run_checkpoint(corpus)  # shared by sig + verify
     return D.rhp_cosine_pairs(
         corpus,
         "vec_id",
@@ -758,9 +759,9 @@ def leakage_safe_split(spark: SparkSession, sf: str) -> DataFrame:
 )
 def cc_incremental_resolution(spark: SparkSession, sf: str) -> DataFrame:
     d = t(spark, sf, "documents")
-    pairs = D.minhash_lsh_pairs(
-        d, "doc_id", "text", min_est_jaccard=0.5
-    ).localCheckpoint()  # NOT persist(): the cache manager plan-matches
+    pairs = run_checkpoint(
+        D.minhash_lsh_pairs(d, "doc_id", "text", min_est_jaccard=0.5), eager=True
+    )  # NOT persist(): the cache manager plan-matches
     # a persisted subplan into EVERY later query computing the same
     # pairs (dedup_minhash_lsh grew an InMemoryTableScan — the round-2
     # cache-hygiene advice); localCheckpoint pins iteration state
@@ -1710,7 +1711,7 @@ def decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     ).select("doc_id", hash64("g").alias("gh"))
     # one shingle+md5 pass shared by the bench (broadcast build) and
     # train (probe) consumers — same barrier as decontaminate_bloom
-    g5 = g5.localCheckpoint(eager=False)
+    g5 = run_checkpoint(g5)
     bench_grams = g5.filter(F.col("doc_id") % 97 == 0).select("gh").distinct()
     train_grams = g5.filter(F.col("doc_id") % 97 != 0)
     hits = (
@@ -2128,7 +2129,7 @@ def dbscan_embedding_clusters(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("w"), F.min("vec_id").alias("rep"))
         .withColumn("cx", F.expr(f"gx div {eps}"))
         .withColumn("cy", F.expr(f"gy div {eps}"))
-        .localCheckpoint()
+        .transform(run_checkpoint, eager=True)
     )
     cells = F.explode(
         F.array(
@@ -2157,7 +2158,7 @@ def dbscan_embedding_clusters(spark: SparkSession, sf: str) -> DataFrame:
             <= eps2
         )
         .select(F.col("rep").alias("rep_a"), "rep_b", "w_b")
-        .localCheckpoint()
+        .transform(run_checkpoint, eager=True)
     )
     mass = cand.groupBy("rep_a").agg(F.sum("w_b").alias("m"))
     # density-ADAPTIVE core threshold: max(minPts, mean neighborhood
@@ -2173,7 +2174,7 @@ def dbscan_embedding_clusters(spark: SparkSession, sf: str) -> DataFrame:
         mass.crossJoin(F.broadcast(stats))
         .filter(F.col("m") >= F.col("__minpts"))
         .select(F.col("rep_a").alias("rep"))
-        .localCheckpoint()
+        .transform(run_checkpoint, eager=True)
     )
     ce = (
         cand.filter(F.col("rep_a") != F.col("rep_b"))
@@ -2866,7 +2867,7 @@ def decontaminate_bloom(spark: SparkSession, sf: str) -> DataFrame:
     # (optimization r11: 13 Generate nodes in the executed plan,
     # 4.4 s -> 2.2 s at sf0.1). One materialization ~= one shuffle of
     # the same rows — the standard price of sharing an intermediate.
-    g5 = g5.localCheckpoint(eager=False)
+    g5 = run_checkpoint(g5)
     bench = g5.filter(F.col("doc_id") % 97 == 0).select("gh").distinct()
     train = g5.filter(F.col("doc_id") % 97 != 0)
     bits = bloom_bits(bench, "gh")
@@ -3131,11 +3132,9 @@ def pmi_topk(spark: SparkSession, sf: str) -> DataFrame:
     # tokenize+explode derivation (4 corpus scans measured). The
     # total is the exact sum of unigram counts, read from the same
     # checkpointed blocks: 4 token explosions -> 1 (+ the bigram one).
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
 
-    uni = supersede_checkpoint(
-        "pmi_topk.uni",
-        toks.groupBy("w").agg(F.count("*").alias("c")).localCheckpoint(eager=False),
+    uni = run_checkpoint(
+        toks.groupBy("w").agg(F.count("*").alias("c"))
     )
     n_tot = uni.agg(F.sum("c").alias("__n"))
     bg = d.select(F.explode(D.word_shingles("text", 2)).alias("bigram"))
@@ -3206,12 +3205,10 @@ def triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     # eager=False keeps build() side-effect free — the edges
     # materialize once at first action and every branch reads the
     # checkpointed blocks.
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
 
     return tc(
-        supersede_checkpoint(
-            "triangle_count.edges",
-            canonical_edges(bg, "w1", "w2").localCheckpoint(eager=False),
+        run_checkpoint(
+            canonical_edges(bg, "w1", "w2")
         )
     )
 
@@ -3269,15 +3266,12 @@ def pagerank_top20(spark: SparkSession, sf: str) -> DataFrame:
     # joins consume edges/nodes from many branches with differing
     # pushdowns (10 corpus scans measured without it); both tables
     # are vocabulary-bounded
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
 
-    edges = supersede_checkpoint(
-        "pagerank_top20.edges",
-        bg.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=False),
+    edges = run_checkpoint(
+        bg.filter(F.col("src") != F.col("dst")).distinct()
     )
-    nodes = supersede_checkpoint(
-        "pagerank_top20.nodes",
-        d.select(F.explode(tokenize("text")).alias("v")).distinct().localCheckpoint(eager=False),
+    nodes = run_checkpoint(
+        d.select(F.explode(tokenize("text")).alias("v")).distinct()
     )
     ranked = pagerank_int(edges, nodes, iterations=2, scale=_PR_SCALE)
     return (
@@ -3319,7 +3313,6 @@ def pagerank_top20(spark: SparkSession, sf: str) -> DataFrame:
     "with MIN over arrival depths, which equals BFS by definition.",
 )
 def graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
     from hadoop_main_spark.operators.graph import bfs_distances
 
     d = t(spark, sf, "documents")
@@ -3327,9 +3320,8 @@ def graph_shortest_paths(spark: SparkSession, sf: str) -> DataFrame:
         F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)).alias("src"),
         F.split_part(F.col("bigram"), F.lit(" "), F.lit(2)).alias("dst"),
     )
-    edges = supersede_checkpoint(
-        "graph_shortest_paths.edges",
-        bg.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=False),
+    edges = run_checkpoint(
+        bg.filter(F.col("src") != F.col("dst")).distinct()
     )
     lms = edges.select("src").distinct().orderBy("src").limit(3).select(
         F.col("src").alias("lm")
@@ -3775,7 +3767,7 @@ def edit_distance_join(spark: SparkSession, sf: str) -> DataFrame:
     # the checkpoint materializes the tiny verified pair set once,
     # INSIDE the timed action (eager would move the cost to build
     # time and cheat the bench)
-    return out.localCheckpoint(eager=False).orderBy("id_a", "id_b")
+    return out.transform(run_checkpoint).orderBy("id_a", "id_b")
 
 
 #: DSIR bucket count and integer ratio scale — shared by the Spark
@@ -4104,9 +4096,10 @@ def opq_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
         F.transform(
             "qvec", lambda v: v.cast("double") / F.lit(10000.0)
         ).alias("embedding"),
-    ).localCheckpoint()  # the codebook TRAINING loop scans rot per
-    # iteration; without this each scan replays the rotation lineage
-    # (localCheckpoint, not persist — cache-manager hygiene)
+    ).transform(run_checkpoint, eager=True)
+    # the codebook TRAINING loop scans rot per iteration; without this
+    # each scan replays the rotation lineage (localCheckpoint, not
+    # persist — cache-manager hygiene)
     cb, _ = SIM.pq_trained_codebook_all(rot, k=16, m=4, max_iter=3)
     enc = SIM.pq_encode(rot, cb)
     qs = [
@@ -4430,18 +4423,17 @@ def _graph_stream_oracle(
     "CTE chain in the registry. A wave searching the wrong graph "
     "state, a lost reverse link, or a replayed batch moves a row. "
     "BUILD-COST NOTE: this builder EXECUTES the full streaming job "
-    "at plan-build time. LOCAL-MODE CONTRACT: tempfile.mkdtemp().",
+    "at plan-build time.",
 )
 def stream_graph_insert_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     from hadoop_main_spark.streaming.windows import knn_graph_stream_parquet
 
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="streamgraph_")
+    root = run_tmpdir("streamgraph_")
     idx = f"{root}/idx"
     SIM.build_knn_graph_index(
         e.filter(F.col("vec_id") >= 40), idx, k=5, iterations=2
@@ -4528,17 +4520,14 @@ def _write_parity_waves(df, root: str, order_col: str = "vec_id") -> str:
     "argmin replay with batch derived from id parity. A re-encoded "
     "corpus row, a wave landing in the wrong partition, or a replay "
     "that double-writes moves a row. BUILD-COST NOTE: executes the "
-    "streaming job at plan-build time. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp().",
+    "streaming job at plan-build time.",
 )
 def stream_pq_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import pq_codes_stream_parquet
 
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
     cb, _ = SIM.pq_codebook(e)
-    root = tempfile.mkdtemp(prefix="streampq_")
+    root = run_tmpdir("streampq_")
     src = _write_parity_waves(e, root)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
@@ -4623,16 +4612,13 @@ def stream_pq_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "batch from id parity. A wrong cell route (centroid drift), a "
     "residual computed against the wrong centroid grid, or a replay "
     "double-write moves a row. BUILD-COST NOTE: builds the index AND "
-    "executes the streaming job at plan-build time. LOCAL-MODE "
-    "CONTRACT: tempfile.mkdtemp().",
+    "executes the streaming job at plan-build time.",
 )
 def stream_residual_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import residual_codes_stream_parquet
 
     e = t(spark, sf, "embeddings")
-    root = tempfile.mkdtemp(prefix="streamres_")
+    root = run_tmpdir("streamres_")
     idx = f"{root}/idx"
     SIM.build_ivfpq_residual_index(e, idx, "label")
     src = _write_parity_waves(e.select("vec_id", "embedding"), root)
@@ -4689,17 +4675,11 @@ def knn_graph_search(spark: SparkSession, sf: str) -> DataFrame:
     # the production path is knn_graph_indexed's persisted index).
     # localCheckpoint, not persist — cache-manager plan-matching would
     # leak the build into knn_graph_nndescent's measured plan
-    g = SIM.nndescent_knn_graph(e, k=10, iterations=2).localCheckpoint()
+    g = run_checkpoint(SIM.nndescent_knn_graph(e, k=10, iterations=2), eager=True)
     qs = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # stable ckpt tag: registry builders are rebuilt fresh before
-    # every execution, so the next build may release this build's hop
-    # checkpoints (the supersede contract)
-    return SIM.knn_graph_search(
-        g, e, qs, k=10, beam=20, hops=3, entries=4,
-        ckpt_tag="q:knn_graph_search",
-    )
+    return SIM.knn_graph_search(g, e, qs, k=10, beam=20, hops=3, entries=4)
 
 
 @query(
@@ -4726,8 +4706,7 @@ def knn_graph_indexed(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return SIM.knn_graph_search_indexed(
-        spark, idx, qs, k=10, beam=20, hops=3, entries=4,
-        ckpt_tag="q:knn_graph_indexed",  # rebuilt fresh per execution
+        spark, idx, qs, k=10, beam=20, hops=3, entries=4
     )
 
 
@@ -4776,19 +4755,13 @@ def knn_graph_layered(spark: SparkSession, sf: str) -> DataFrame:
     qs = e.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 10)).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # distinct ckpt tags per search SITE: both searches live in ONE
-    # plan (the outer's entry_pool is the inner's result), so a shared
-    # tag would let the outer registration forget the inner's
-    # not-yet-materialized hop checkpoints (advice r11 #1)
     pool = SIM.knn_graph_search_indexed(
-        spark, f"{idx}/l1", qs, k=10, beam=20, hops=3, entries=2,
-        ckpt_tag="knn_graph_layered.l1",
+        spark, f"{idx}/l1", qs, k=10, beam=20, hops=3, entries=2
     ).select("query_id", F.col("neighbor_id").alias("node"))
     g0 = spark.read.parquet(f"{idx}/l0/graph")
     n0 = spark.read.parquet(f"{idx}/l0/nodes")
     return SIM.knn_graph_search(
-        g0, n0, qs, k=10, beam=32, hops=2, entry_pool=pool,
-        ckpt_tag="knn_graph_layered.l0",
+        g0, n0, qs, k=10, beam=32, hops=2, entry_pool=pool
     )
 
 
@@ -5460,8 +5433,6 @@ def entity_clusters(spark: SparkSession, sf: str) -> DataFrame:
     "full-outer join on the pair key.",
 )
 def lsh_quality_eval(spark: SparkSession, sf: str) -> DataFrame:
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
-
     d = t(spark, sf, "documents")
     # ONE tokenize+shingle pass for both estimators (optimization
     # r12, verdict-r11 #4): the LSH side's MinHash is invariant under
@@ -5470,9 +5441,8 @@ def lsh_quality_eval(spark: SparkSession, sf: str) -> DataFrame:
     # both read the same lazily-checkpointed distinct-gram table
     # instead of re-tokenizing the corpus per side. Lazy: the pass
     # still runs fresh inside every timed action.
-    grams = supersede_checkpoint(
-        "lsh_quality.grams",
-        D.distinct_grams(d, "doc_id", "text", n=3).localCheckpoint(eager=False),
+    grams = run_checkpoint(
+        D.distinct_grams(d, "doc_id", "text", n=3)
     )
     est = D.lsh_pairs_from_signatures(
         D.minhash_signature_from_grams(grams, "doc_id"),
@@ -6867,15 +6837,13 @@ def weighted_doc_sample(spark: SparkSession, sf: str) -> DataFrame:
     "oracle VERBATIM: a chunk lost at a batch boundary, a replayed "
     "double-write, or any stream-vs-batch boundary divergence moves "
     "a count. BUILD-COST NOTE: executes the streaming job at "
-    "plan-build time. LOCAL-MODE CONTRACT: tempfile.mkdtemp().",
+    "plan-build time.",
 )
 def stream_cdc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import cdc_chunks_stream_parquet
 
     d = t(spark, sf, "documents")
-    root = tempfile.mkdtemp(prefix="streamcdc_")
+    root = run_tmpdir("streamcdc_")
     src = _write_parity_waves(d.select("doc_id", "text"), root, "doc_id")
     stream = (
         spark.readStream.schema("doc_id long, text string")
@@ -6985,12 +6953,9 @@ def _cdc_delta_oracle() -> str:
     "touched — per language the output pins total chars vs uploaded "
     "chars (the delta-transfer win, typically a few chunks per "
     "changed doc), and the oracle replays BOTH chunkings plus the "
-    "store anti-join closed-form. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() snapshot dir.",
+    "store anti-join closed-form.",
 )
 def cdc_delta_transfer(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.versioned import read_version, write_version
 
     par = spark.sparkContext.defaultParallelism
@@ -6998,7 +6963,7 @@ def cdc_delta_transfer(spark: SparkSession, sf: str) -> DataFrame:
     c1 = D.cdc_chunks(
         d.select("doc_id", "text").repartition(par)
     )
-    snap = tempfile.mkdtemp(prefix="cdcstore_")
+    snap = run_tmpdir("cdcstore_")
     write_version(
         c1.select(F.col("chunk_md5").alias("dg")).distinct(), snap
     )
@@ -7097,7 +7062,6 @@ _HITS_BOUND = (2**63 - 1) // _HITS_SCALE
     "the L-inf max rides as a one-row broadcast.",
 )
 def hits_top20(spark: SparkSession, sf: str) -> DataFrame:
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
     from hadoop_main_spark.operators.graph import hits_int
     from hadoop_main_spark.operators.transforms import tokenize
 
@@ -7109,17 +7073,13 @@ def hits_top20(spark: SparkSession, sf: str) -> DataFrame:
     # lazy-checkpointed like pagerank_top20's tables: the 4 half-step
     # joins consume edges/nodes from many branches with differing
     # pushdowns; both tables are vocabulary-bounded
-    edges = supersede_checkpoint(
-        "hits_top20.edges",
+    edges = run_checkpoint(
         bg.filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=False),
     )
-    nodes = supersede_checkpoint(
-        "hits_top20.nodes",
+    nodes = run_checkpoint(
         d.select(F.explode(tokenize("text")).alias("v"))
         .distinct()
-        .localCheckpoint(eager=False),
     )
     scored = hits_int(edges, nodes, iterations=2, scale=_HITS_SCALE)
     return (
@@ -7292,11 +7252,9 @@ def sorted_neighborhood_dedup(spark: SparkSession, sf: str) -> DataFrame:
     "(one-shot equality): a double-applied wave, a lost view key at "
     "a batch boundary, or a combine-algebra error moves a count. "
     "BUILD-COST NOTE: executes the streaming job at plan-build "
-    "time. LOCAL-MODE CONTRACT: tempfile.mkdtemp().",
+    "time.",
 )
 def stream_agg_view_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import (
         agg_view_stream_parquet,
         read_agg_view,
@@ -7305,7 +7263,7 @@ def stream_agg_view_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     e = t(spark, sf, "events").select(
         "user_id", "event_type", "event_id", "value"
     )
-    root = tempfile.mkdtemp(prefix="streamaggview_")
+    root = run_tmpdir("streamaggview_")
     src = _write_parity_waves(e, root, "event_id")
     stream = (
         spark.readStream.schema(
@@ -7413,7 +7371,6 @@ _SSJ_COMBOS = tuple(_it.combinations(range(_SSJ_B), _SSJ_B - 1))
 )
 def set_similarity_join(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.functions.hashing import hash64
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
     from hadoop_main_spark.operators.transforms import tokenize
 
     d = t(spark, sf, "documents")
@@ -7431,11 +7388,9 @@ def set_similarity_join(spark: SparkSession, sf: str) -> DataFrame:
     # BOTH verification branches with different pushdowns — checkpoint
     # once (the pagerank/pmi discipline); vocabulary x distinct-set
     # bounded
-    gt = supersede_checkpoint(
-        "set_similarity_join.gt",
+    gt = run_checkpoint(
         grp.select("rep")
         .join(toks.withColumnRenamed("doc_id", "rep"), "rep")
-        .localCheckpoint(eager=False),
     )
     # completeness guard: the 7-subset bands tolerate ONE corrupted
     # bucket, i.e. (|a|+|b|)/39 <= 1; any set over 38 tokens could
@@ -7569,7 +7524,6 @@ def set_similarity_join(spark: SparkSession, sf: str) -> DataFrame:
 def heavy_hitters_sketch(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.functions.hashing import hash64
     from hadoop_main_spark.functions.sketches import CM_DEPTH, count_min_table
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
 
     support = 40
     width = 4096
@@ -7577,9 +7531,8 @@ def heavy_hitters_sketch(spark: SparkSession, sf: str) -> DataFrame:
     bg = d.select(F.explode(D.word_shingles("text", 2)).alias("bigram"))
     # the sketch build and the probe pass both scan the bigram
     # explode; the sketch itself is <= depth*width rows
-    sk = supersede_checkpoint(
-        "heavy_hitters_sketch.cm",
-        count_min_table(bg, "bigram", width=width).localCheckpoint(eager=False),
+    sk = run_checkpoint(
+        count_min_table(bg, "bigram", width=width)
     )
     probed = bg
     ests = []

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from hadoop_main_spark.operators import multimodal as MM
 from hadoop_main_spark.operators import pipe as PIPE
+from hadoop_main_spark.operators.checkpoints import run_checkpoint, run_tmpdir
 from hadoop_main_spark.plans.registry import query, t
 
 
@@ -1095,19 +1096,17 @@ def id3_apic_art_dedup(spark: SparkSession, sf: str) -> DataFrame:
     "any encode/decode corruption of any row moves the checksum. The "
     "write lands in a per-session temp dir (generator-query "
     "discipline, like db_count_pageview's embedded Derby). "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() resolves on the driver "
+    "LOCAL-MODE CONTRACT: the temp dir resolves on the driver "
     "and the mapInArrow writer opens it on executors — one shared "
     "filesystem here; on a real cluster pass write_avro a shared-FS "
     "path (S3/HDFS) instead (same caveat as _ivfpq_index_dir).",
 )
 def avro_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.avro import write_avro
     from hadoop_main_spark.sources.text import auto_input
 
     d = t(spark, sf, "documents")
-    out = tempfile.mkdtemp(prefix="avro_rt_") + "/documents.avro"
+    out = run_tmpdir("avro_rt_") + "/documents.avro"
     write_avro(d, out, codec="deflate")
     back = auto_input(spark, out)
     h60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
@@ -1137,15 +1136,11 @@ def avro_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "path executes (stripe/row-group stats prune on the min/max of "
     "n_chars), then per-language counts, char sums, and the "
     "order-independent 60-bit text checksum must match the oracle on "
-    "the ORIGINAL parquet. LOCAL-MODE CONTRACT: tempfile.mkdtemp() as "
-    "the write target (shared FS on a real cluster — the write_avro "
-    "caveat).",
+    "the ORIGINAL parquet.",
 )
 def orc_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     d = t(spark, sf, "documents").select("doc_id", "lang", "n_chars", "text")
-    out = tempfile.mkdtemp(prefix="orc_rt_") + "/documents.orc"
+    out = run_tmpdir("orc_rt_") + "/documents.orc"
     d.write.option("compression", "zlib").orc(out)
     back = spark.read.orc(out).filter(F.col("n_chars") >= 200)
     h60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
@@ -1183,19 +1178,16 @@ _CSV_EVIL = '\n",\\\t'
     "multiLine=true and an explicit schema, and checksummed per "
     "language against the oracle computing the same adversarial text "
     "directly on the parquet — so the quoting/escaping machinery "
-    "itself is what is verified, not just happy-path values. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() write target.",
+    "itself is what is verified, not just happy-path values.",
 )
 def csv_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     d = t(spark, sf, "documents").select(
         "doc_id",
         "lang",
         "n_chars",
         F.concat(F.col("text"), F.lit(_CSV_EVIL)).alias("text"),
     )
-    out = tempfile.mkdtemp(prefix="csv_rt_") + "/documents.csv"
+    out = run_tmpdir("csv_rt_") + "/documents.csv"
     (
         d.write.option("header", "true")
         .option("quoteAll", "true")
@@ -1240,20 +1232,16 @@ def csv_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "reader, and aggregated per layout: row count, id sum, and an "
     "order-independent 60-bit text checksum must equal the oracle "
     "computed on the ORIGINAL parquet for every layout; any "
-    "encode/decode corruption in any layout moves its row. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() as the write target "
-    "(shared FS on a real cluster — the write_avro caveat).",
+    "encode/decode corruption in any layout moves its row.",
 )
 def seqfile_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.sequencefile import (
         read_sequencefile,
         write_sequencefile,
     )
 
     d = t(spark, sf, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="seqrt_")
+    base = run_tmpdir("seqrt_")
     parts = []
     for layout, codec, block in (
         ("none", None, None),
@@ -1293,15 +1281,13 @@ def seqfile_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "read_fixed_width's offsets, and re-aggregated per language — "
     "counts, id sums, and char sums must match the oracle on the "
     "original parquet, so any mis-sliced offset or padding bug moves "
-    "a value. LOCAL-MODE CONTRACT: tempfile.mkdtemp() target.",
+    "a value.",
 )
 def fixedwidth_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.text import read_fixed_width
 
     d = t(spark, sf, "documents")
-    out = tempfile.mkdtemp(prefix="fixedrt_") + "/docs"
+    out = run_tmpdir("fixedrt_") + "/docs"
     (
         d.select(
             F.concat(
@@ -1345,16 +1331,13 @@ def fixedwidth_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "read back with read_xml_records's begin/end-mark scan, fields "
     "re-extracted, and re-aggregated per language against the oracle "
     "on the original parquet — a mis-framed record boundary or "
-    "dropped element moves a count. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() target.",
+    "dropped element moves a count.",
 )
 def xml_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.text import read_xml_records
 
     d = t(spark, sf, "documents")
-    out = tempfile.mkdtemp(prefix="xmlrt_") + "/docs"
+    out = run_tmpdir("xmlrt_") + "/docs"
     (
         d.select(
             F.concat(
@@ -1406,16 +1389,13 @@ def xml_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "back THROUGH the har:// filesystem at the archive ROOT (the "
     "reader resolves the index and slices part files), re-parsed and "
     "re-aggregated per language against the oracle on the original "
-    "parquet — an index offset bug or truncated entry moves a sum. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() target.",
+    "parquet — an index offset bug or truncated entry moves a sum.",
 )
 def har_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.har import create_har
 
     d = t(spark, sf, "documents")
-    base = tempfile.mkdtemp(prefix="harrt_")
+    base = run_tmpdir("harrt_")
     src, har = f"{base}/src", f"{base}/docs.har"
     (
         d.select(
@@ -1463,15 +1443,12 @@ def har_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "documents COPY is read and aggregated — per-language counts and "
     "the order-independent 60-bit text checksum must equal the "
     "oracle computed on the ORIGINAL file, certifying a byte-exact "
-    "distributed copy end-to-end. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() target.",
+    "distributed copy end-to-end.",
 )
 def distcp_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.sources.distcp import distcp
 
-    dst_dir = tempfile.mkdtemp(prefix="distcprt_")
+    dst_dir = run_tmpdir("distcprt_")
     dst = f"{dst_dir}/documents.parquet"
     report = distcp(spark, sf.rstrip("/"), dst_dir)
     bad = report.filter(F.col("ok") == 0).count() if "ok" in report.columns else 0
@@ -1583,16 +1560,13 @@ def _stream_dedup_oracle() -> str:
     "at plan-build time (write + awaitTermination) and returns a "
     "batch read of the sink — plans-only tooling (dump_plans, "
     "plan_lint) pays a multi-second stream execution per call. "
-    "missing/duplicated pair. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() sinks (shared FS on a real cluster).",
+    "missing/duplicated pair.",
 )
 def stream_dedup_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import dedup_ingest_stream
 
     d = t(spark, sf, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="streamrt_")
+    base = run_tmpdir("streamrt_")
     src = f"{base}/src"
     # 4 source files -> 4 genuine micro-batches; which docs land in
     # which batch is irrelevant by the union invariant
@@ -1755,15 +1729,13 @@ def audio_container_meta(spark: SparkSession, sf: str) -> DataFrame:
     return MM.audio_container_meta(media)
 
 
-def _timesplit_stream(
-    spark: SparkSession, df: DataFrame, ts_col: str, src: str, parts: int = 4
-) -> DataFrame:
-    """Replay ``df`` as a ``parts``-micro-batch file stream in EVENT-
-    TIME order: contiguous time-range slices, one single-file batch
-    each, mtimes strictly increasing so FileStreamSource (oldest-
+def _timesplit_files(df: DataFrame, ts_col: str, src: str, parts: int = 4) -> str:
+    """Stage ``df`` in ``src`` for a ``parts``-micro-batch replay in
+    EVENT-TIME order: contiguous time-range slices, one single-file
+    batch each, mtimes strictly increasing so FileStreamSource (oldest-
     first) feeds them in order — the watermark-contract replay shared
-    by every stream_*_roundtrip driver gate. Returns the readStream
-    DataFrame (maxFilesPerTrigger=1)."""
+    by every stream_*_roundtrip driver gate. Returns ``src``; read it
+    with :func:`_replay`."""
     import datetime
     import glob
     import os
@@ -1786,6 +1758,12 @@ def _timesplit_stream(
         dst = f"{src}/q{k}.parquet"
         shutil.move(pf, dst)
         os.utime(dst, (1_700_000_000 + k * 60, 1_700_000_000 + k * 60))
+    return src
+
+
+def _replay(spark: SparkSession, src: str) -> DataFrame:
+    """One-file-per-micro-batch stream over the parquet files in
+    ``src``."""
     return (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
@@ -1828,30 +1806,27 @@ def _timesplit_stream(
     "at plan-build time (write + awaitTermination) and returns a "
     "batch read of the sink — plans-only tooling (dump_plans, "
     "plan_lint) pays a multi-second stream execution per call. "
-    "watermark promises, not a bug. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp() sinks.",
+    "watermark promises, not a bug.",
 )
 def stream_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import (
-        stream_partition_scope,
+        stream_session,
         tumbling_counts,
         write_stream_parquet,
     )
 
     e = t(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="streamwrt_")
-    stream = _timesplit_stream(spark, e, "ts", f"{base}/src")
+    base = run_tmpdir("streamwrt_")
+    src = _timesplit_files(e, "ts", f"{base}/src")
     # volume-derived state partitioning for the stateful window agg
     # (optimization r12; see sized_stream_partitions)
-    with stream_partition_scope(spark, f"{base}/src", n_batches=4):
-        q = write_stream_parquet(
-            tumbling_counts(stream, window="1 hour", watermark="2 hours"),
-            f"{base}/out",
-            f"{base}/ckpt",
-        )
-        q.awaitTermination()
+    stream = _replay(stream_session(spark, src, n_batches=4), src)
+    q = write_stream_parquet(
+        tumbling_counts(stream, window="1 hour", watermark="2 hours"),
+        f"{base}/out",
+        f"{base}/ckpt",
+    )
+    q.awaitTermination()
     return spark.read.parquet(f"{base}/out").select(
         F.unix_timestamp("window_start").cast("bigint").alias("window_start"),
         "event_type",
@@ -1895,24 +1870,21 @@ def stream_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "at plan-build time (write + awaitTermination) and returns a "
     "batch read of the sink — plans-only tooling (dump_plans, "
     "plan_lint) pays a multi-second stream execution per call. "
-    "boundary merge, or session-splitting bug moves rows. LOCAL-MODE "
-    "CONTRACT: tempfile.mkdtemp() sinks (shared FS on a real cluster).",
+    "boundary merge, or session-splitting bug moves rows.",
 )
 def stream_session_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window
     from hadoop_main_spark.streaming.stateful import gap_sessions
 
     e = t(spark, sf, "events").select("user_id", "ts", "event_id")
-    base = tempfile.mkdtemp(prefix="streamsess_")
-    stream = _timesplit_stream(spark, e, "ts", f"{base}/src")
+    base = run_tmpdir("streamsess_")
+    stream = _replay(spark, _timesplit_files(e, "ts", f"{base}/src"))
     out = f"{base}/out"
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
 
-    # NO stream_partition_scope here (optimization r12, measured):
+    # NO stream_session here (optimization r12, measured):
     # applyInPandasWithState does real per-key Python work — shrinking
     # the state partitioning serializes that compute; unlike the
     # JVM-native window/join state whose per-partition store machinery
@@ -1959,36 +1931,30 @@ def stream_session_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "batch read of the sink — plans-only tooling (dump_plans, "
     "plan_lint) pays a multi-second stream execution per call. "
     "join state survives exactly as long as the watermark promises; "
-    "a premature state eviction or a dropped late row moves pairs. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() sinks.",
+    "a premature state eviction or a dropped late row moves pairs.",
 )
 def stream_interval_join_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.joins import interval_join
-    from hadoop_main_spark.streaming.windows import (
-        stream_partition_scope,
-        write_stream_parquet,
-    )
+    from hadoop_main_spark.streaming.windows import stream_session, write_stream_parquet
 
     e = t(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="streamssj_")
+    base = run_tmpdir("streamssj_")
     clicks = e.filter(F.col("event_type") == "click").select(
         "user_id", F.col("ts").alias("l_ts"), F.col("event_id").alias("click_id")
     )
     buys = e.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("r_ts"), F.col("event_id").alias("purchase_id")
     )
-    sl = _timesplit_stream(spark, clicks, "l_ts", f"{base}/src_l")
-    sr = _timesplit_stream(spark, buys, "r_ts", f"{base}/src_r")
-    j = interval_join(sl, sr, "user_id").select("click_id", "purchase_id")
+    src_l = _timesplit_files(clicks, "l_ts", f"{base}/src_l")
+    src_r = _timesplit_files(buys, "r_ts", f"{base}/src_r")
     # volume-derived state partitioning for the stream-stream join
     # state (optimization r12; see sized_stream_partitions)
-    with stream_partition_scope(
-        spark, [f"{base}/src_l", f"{base}/src_r"], n_batches=4
-    ):
-        q = write_stream_parquet(j, f"{base}/out", f"{base}/ckpt")
-        q.awaitTermination()
+    child = stream_session(spark, [src_l, src_r], n_batches=4)
+    j = interval_join(_replay(child, src_l), _replay(child, src_r), "user_id")
+    q = write_stream_parquet(
+        j.select("click_id", "purchase_id"), f"{base}/out", f"{base}/ckpt"
+    )
+    q.awaitTermination()
     return spark.read.parquet(f"{base}/out").select("click_id", "purchase_id")
 
 
@@ -2012,19 +1978,16 @@ def stream_interval_join_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "must equal the batch groupBy exactly. A lost batch, a stale "
     "state read, or a double-applied replay moves a count. "
     "BUILD-COST NOTE: this builder EXECUTES the full streaming job "
-    "at plan-build time. LOCAL-MODE CONTRACT: tempfile.mkdtemp() "
-    "sinks.",
+    "at plan-build time.",
 )
 def stream_running_totals_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window
     from hadoop_main_spark.streaming.stateful import running_totals
 
     e = t(spark, sf, "events").select(
         "user_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    base = tempfile.mkdtemp(prefix="streamrun_")
+    base = run_tmpdir("streamrun_")
     src = f"{base}/src"
     e.repartition(4).write.parquet(src)
     stream = (
@@ -2037,7 +2000,7 @@ def stream_running_totals_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     def sink(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
 
-    # NO stream_partition_scope here (optimization r12, measured):
+    # NO stream_session here (optimization r12, measured):
     # applyInPandasWithState does real per-key Python work — shrinking
     # the state partitioning serializes that compute (see the
     # stream_session_roundtrip note).
@@ -2088,32 +2051,27 @@ def stream_running_totals_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "windows (the unnest([0,1]) expansion in the oracle) and the sink "
     "must hold exactly the windows with window_end <= max(ts) - 4h "
     "with batch-identical decimal-exact averages. BUILD-COST NOTE: "
-    "this builder EXECUTES the full streaming job at plan-build time. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() sinks.",
+    "this builder EXECUTES the full streaming job at plan-build time.",
 )
 def stream_sliding_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import tempfile
-
     from hadoop_main_spark.streaming.windows import (
         sliding_avg,
-        stream_partition_scope,
+        stream_session,
         write_stream_parquet,
     )
 
     e = t(spark, sf, "events")
-    base = tempfile.mkdtemp(prefix="streamslw_")
-    stream = _timesplit_stream(spark, e, "ts", f"{base}/src")
+    base = run_tmpdir("streamslw_")
+    src = _timesplit_files(e, "ts", f"{base}/src")
     # volume-derived state partitioning for the sliding-window agg
     # (optimization r12; see sized_stream_partitions)
-    with stream_partition_scope(spark, f"{base}/src", n_batches=4):
-        q = write_stream_parquet(
-            sliding_avg(
-                stream, window="2 hours", slide="1 hour", watermark="4 hours"
-            ),
-            f"{base}/out",
-            f"{base}/ckpt",
-        )
-        q.awaitTermination()
+    stream = _replay(stream_session(spark, src, n_batches=4), src)
+    q = write_stream_parquet(
+        sliding_avg(stream, window="2 hours", slide="1 hour", watermark="4 hours"),
+        f"{base}/out",
+        f"{base}/ckpt",
+    )
+    q.awaitTermination()
     return spark.read.parquet(f"{base}/out").select(
         F.unix_timestamp("window_start").cast("bigint").alias("window_start"),
         "event_type",
@@ -2144,19 +2102,17 @@ def stream_sliding_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "recomputes from the mod-4 split in closed form. A lost "
     "accumulated key, a stale read of the being-replaced dir, or a "
     "double-applied replay moves a row. BUILD-COST NOTE: this "
-    "builder EXECUTES the full streaming job at plan-build time. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() sinks.",
+    "builder EXECUTES the full streaming job at plan-build time.",
 )
 def stream_upsert_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     from hadoop_main_spark.streaming.windows import upsert_stream_parquet
 
     e = t(spark, sf, "events").select("user_id", "event_id", "ts")
-    base = tempfile.mkdtemp(prefix="streamup_")
+    base = run_tmpdir("streamup_")
     src = f"{base}/src"
     os.makedirs(src)
     for k in range(4):
@@ -2906,14 +2862,12 @@ def pdf15_text_extract(spark: SparkSession, sf: str) -> DataFrame:
     "pdf_text_extract's closed-form oracle VERBATIM: a record lost "
     "at a batch boundary, a replayed file double-write, or any "
     "stream-vs-batch walker divergence moves a row. BUILD-COST NOTE: "
-    "executes the streaming job at plan-build time. LOCAL-MODE "
-    "CONTRACT: tempfile.mkdtemp().",
+    "executes the streaming job at plan-build time.",
 )
 def stream_pdf_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     import pandas as pd
 
@@ -2933,7 +2887,7 @@ def stream_pdf_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
             yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
     media = docs.mapInPandas(gen, "media_id long, payload binary")
-    base = tempfile.mkdtemp(prefix="streampdf_")
+    base = run_tmpdir("streampdf_")
     src = f"{base}/src"
     os.makedirs(src)
     for w in (0, 1):
@@ -2996,7 +2950,7 @@ def stream_pdf_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "ones. The records parse back through warc_records and must "
     "match the closed-form oracle: record type, profile, refers-to, "
     "digest, and body md5/bytes all derived from the doc-id change "
-    "rule. LOCAL-MODE CONTRACT: tempfile.mkdtemp() snapshot dir.",
+    "rule.",
 )
 def warc_revisit_dedup(spark: SparkSession, sf: str) -> DataFrame:
     return (
@@ -3012,7 +2966,7 @@ def warc_revisit_dedup(spark: SparkSession, sf: str) -> DataFrame:
         # kernel stages) a second time — measured 3.0 s -> chain-only
         # 1.2 s at sf0.1. Eager would move the cost out of the timed
         # action and cheat the bench.
-        .localCheckpoint(eager=False)
+        .transform(run_checkpoint)
         .orderBy("media_id")
     )
 
@@ -3053,7 +3007,6 @@ def _recrawl_records(spark: SparkSession, sf: str) -> DataFrame:
     commit as a versioned snapshot, the recrawl writes through
     revisit_warc_media against that snapshot, and the one-record
     WARCs parse back through warc_records."""
-    import tempfile
 
     from hadoop_main_spark.sources.versioned import read_version, write_version
     from hadoop_main_spark.sources.warc import revisit_warc_media, warc_records
@@ -3062,7 +3015,7 @@ def _recrawl_records(spark: SparkSession, sf: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
     crawl1 = _recrawl_crawl(docs, changed=False)
-    snap = tempfile.mkdtemp(prefix="warcsnap_")
+    snap = run_tmpdir("warcsnap_")
     write_version(crawl1.select("uri", "digest"), snap)
     crawl2 = _recrawl_crawl(docs, changed=True)
     warcs = revisit_warc_media(
@@ -3322,7 +3275,6 @@ def image_exif_meta(spark: SparkSession, sf: str) -> DataFrame:
 def html_link_graph(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
-    from hadoop_main_spark.operators.checkpoints import supersede_checkpoint
     from hadoop_main_spark.operators.graph import pagerank_int
     from hadoop_main_spark.operators.html import extract_links
 
@@ -3372,15 +3324,11 @@ def html_link_graph(spark: SparkSession, sf: str) -> DataFrame:
     )
     # lazy-checkpointed like pagerank_top20: the iteration consumes
     # edges/nodes from many branches; both tables are host-bounded
-    edges = supersede_checkpoint(
-        "html_link_graph.edges", edges.localCheckpoint(eager=False)
-    )
-    nodes = supersede_checkpoint(
-        "html_link_graph.nodes",
+    edges = run_checkpoint(edges)
+    nodes = run_checkpoint(
         page_hosts.select(F.col("src").alias("v"))
         .union(edges.select(F.col("dst").alias("v")))
         .distinct()
-        .localCheckpoint(eager=False),
     )
     ranked = pagerank_int(edges, nodes, iterations=2, scale=10**12)
     return (
@@ -3408,19 +3356,17 @@ def html_link_graph(spark: SparkSession, sf: str) -> DataFrame:
     "divergence between the streaming and batch code paths moves a "
     "row. BUILD-COST NOTE: this builder EXECUTES the full streaming "
     "job at plan-build time — plans-only tooling (dump_plans, "
-    "plan_lint) pays a multi-second stream execution per call. "
-    "LOCAL-MODE CONTRACT: tempfile.mkdtemp() sinks.",
+    "plan_lint) pays a multi-second stream execution per call.",
 )
 def stream_warc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     from hadoop_main_spark.streaming.windows import warc_records_stream_parquet
 
     media = _warc_media(spark, sf)
-    base = tempfile.mkdtemp(prefix="streamwarc_")
+    base = run_tmpdir("streamwarc_")
     src = f"{base}/src"
     os.makedirs(src)
     for k in range(4):
@@ -3480,14 +3426,12 @@ def stream_warc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "(pixel rows are (doc_id*31 + r) % 256). A dropped wave, a "
     "replayed file double-write, or any stream-vs-batch decoder "
     "divergence moves a row. BUILD-COST NOTE: executes the streaming "
-    "job at plan-build time. LOCAL-MODE CONTRACT: "
-    "tempfile.mkdtemp().",
+    "job at plan-build time.",
 )
 def stream_media_features_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     import pandas as pd
 
@@ -3513,7 +3457,7 @@ def stream_media_features_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
             yield pd.DataFrame({"media_id": ids, "payload": payloads})
 
     media = docs.mapInPandas(gen, "media_id long, payload binary")
-    base = tempfile.mkdtemp(prefix="streammedia_")
+    base = run_tmpdir("streammedia_")
     src = f"{base}/src"
     os.makedirs(src)
     for w in (0, 1):
@@ -3591,8 +3535,7 @@ ORDER BY doc_id
     "singleton), with the record class matching the closed-form "
     "change rule. A wrong revisit decision corrupts the wave and "
     "moves cluster rows — the composition, not just the pieces, is "
-    "what's verified. LOCAL-MODE CONTRACT: tempfile.mkdtemp() "
-    "snapshot dir.",
+    "what's verified.",
 )
 def recrawl_maintenance(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.operators import dedup as D
@@ -3606,11 +3549,11 @@ def recrawl_maintenance(spark: SparkSession, sf: str) -> DataFrame:
     # (three Python kernel stages) executes once PER consumer
     # (optimization r12, verdict-r11 #3; the decontaminate pattern).
     # Lazy: the chain still runs fresh inside every timed action.
-    rec = rec.localCheckpoint(eager=False)
+    rec = run_checkpoint(rec)
     docs = t(spark, sf, "documents")
-    pairs = D.minhash_lsh_pairs(
-        docs, "doc_id", "text", min_est_jaccard=0.5
-    ).localCheckpoint()  # pin iteration input without cache-manager
+    pairs = run_checkpoint(
+        D.minhash_lsh_pairs(docs, "doc_id", "text", min_est_jaccard=0.5), eager=True
+    )  # pin iteration input without cache-manager
     # registration (the cc_incremental_resolution discipline)
     # the wave comes OUT OF THE PARSED WARC: a doc stored as a full
     # response record changed content and re-enters clustering
@@ -3649,6 +3592,6 @@ def recrawl_maintenance(spark: SparkSession, sf: str) -> DataFrame:
         # LAZY checkpoint before the sort: the range-sampling pass
         # otherwise re-executes the record-class + cluster joins
         # (optimization r12, the warc_revisit_dedup note)
-        .localCheckpoint(eager=False)
+        .transform(run_checkpoint)
         .orderBy("doc_id")
     )

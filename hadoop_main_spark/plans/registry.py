@@ -12,6 +12,17 @@ compare sorts columns by name before hashing). Float discipline:
 money sums go through DECIMAL (exact, order-independent) and are
 cast to double only at the end; means/stddevs are derived from
 exact sums (see operators/aggregate.py).
+
+Run scope: ``REGISTRY[name].build`` is the builder wrapped by
+``operators.checkpoints.run_scope``, so the temp dirs and checkpoints
+a build makes belong to that query's run. A build's DataFrame is
+valid until the same query builds again: the next build releases the
+previous run's checkpoint blocks and removes its temp dirs. Every
+consumer (bench, the oracle checks, the driver) builds, then executes
+once. Persisted indexes (``_index_dir``) outlive runs on purpose.
+The run dirs are made on the driver and opened by executors too:
+local mode shares one filesystem; on a cluster they must sit on a
+shared FS.
 """
 
 from __future__ import annotations
@@ -22,6 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_main_spark.operators.checkpoints import run_scope
 from hadoop_main_spark.tables import load_table
 
 
@@ -58,7 +70,9 @@ def query(name: str, oracle=None, doc: str = "", bench: bool = False):
             # from the driver contract (review-r5: a new 3-stage funnel
             # nearly shadowed the existing funnel_conversion)
             raise ValueError(f"duplicate registry query name: {name!r}")
-        REGISTRY[name] = Query(name, fn, oracle, doc or (fn.__doc__ or ""), bench)
+        REGISTRY[name] = Query(
+            name, run_scope(name, fn), oracle, doc or (fn.__doc__ or ""), bench
+        )
         return fn
 
     return deco

@@ -24,8 +24,10 @@ def read_sequencefile(
     Writable→Python conversion is Spark's builtin (Text→str,
     IntWritable/LongWritable→int, …). Reference reader:
     MRC/mapreduce/lib/input/SequenceFileInputFormat.java:1."""
-    rdd = spark.sparkContext.sequenceFile(path)
-    return rdd.toDF([key, value])
+    # createDataFrame on THIS session, not rdd.toDF(): PySpark binds
+    # toDF to the most recently constructed session (a stream_session
+    # child, say)
+    return spark.createDataFrame(spark.sparkContext.sequenceFile(path), [key, value])
 
 
 #: short names for the public Hadoop codec classes shipped with Spark

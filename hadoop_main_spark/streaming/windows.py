@@ -186,11 +186,15 @@ def run_to_memory(
         raise TimeoutError(f"stream '{name}' did not finish in {timeout_s}s")
 
 
+#: source bytes per state partition for :func:`sized_stream_partitions`
+STREAM_TARGET_BYTES = 4 << 20
+
+
 def sized_stream_partitions(src_dirs, n_batches: int = 1) -> int:
     """Volume-derived shuffle/state partition count for a replayed
     file stream (optimization r12, guide §2: derive partitioning from
     input size, never a constant): ceil(per-batch source bytes /
-    target), clamped to [1, default_parallelism].
+    STREAM_TARGET_BYTES), clamped to [1, default_parallelism].
 
     Why streams need this when batch does not: stateful operators pin
     their state partitioning to spark.sql.shuffle.partitions at the
@@ -198,8 +202,7 @@ def sized_stream_partitions(src_dirs, n_batches: int = 1) -> int:
     re-coalesces streaming state — so the constant must be chosen
     scale-consciously up front. A production checkpoint sizes it to
     peak per-batch volume over a tens-of-MB target; the fixture-scale
-    default target (4 MiB of source bytes per partition,
-    env-overridable via SPARK_GRAFT_STREAM_TARGET_BYTES) keeps tiny
+    target (4 MiB of source bytes per partition) keeps tiny
     availableNow replays from paying one state-store open/commit/
     snapshot per core per batch. Measured on the sliding-window gate
     at sf0.1 (25k-row batches): ~60% of stream wall is per-partition
@@ -221,38 +224,30 @@ def sized_stream_partitions(src_dirs, n_batches: int = 1) -> int:
                         total += os.path.getsize(os.path.join(root, f))
                     except OSError:
                         pass
-    target = int(
-        os.environ.get("SPARK_GRAFT_STREAM_TARGET_BYTES", str(4 << 20))
-    )
     per_batch = total / max(1, n_batches)
-    return max(1, min(default_parallelism(), math.ceil(per_batch / max(1, target))))
+    return max(1, min(default_parallelism(), math.ceil(per_batch / STREAM_TARGET_BYTES)))
 
 
-class stream_partition_scope:
-    """Context manager scoping spark.sql.shuffle.partitions to
-    :func:`sized_stream_partitions` while a NATIVE-stateful replay
-    stream starts and drains (the conf must be live through first-
-    batch planning, i.e. through awaitTermination), restoring the
-    session value afterwards. Apply only to stateful-operator streams
-    (window aggs, applyInPandasWithState, stream-stream joins) —
-    foreachBatch streams run batch jobs whose shuffles AQE already
-    coalesces, and Python-decode streams WANT full parallelism.
-    Session confs are global: a query building concurrently may plan
-    a batch shuffle at the scoped value — harmless for results (AQE
-    re-coalesces batch shuffles) and bounded by the scope."""
-
-    def __init__(self, spark: SparkSession, src_dirs, n_batches: int = 1):
-        self._spark = spark
-        self._n = sized_stream_partitions(src_dirs, n_batches)
-
-    def __enter__(self):
-        self._prev = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-        return self._n
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
-        return False
+def stream_session(spark: SparkSession, src_dirs, n_batches: int = 1) -> SparkSession:
+    """A child session (``spark.newSession()``: own SQL conf, shared
+    SparkContext) for a NATIVE-stateful replay stream, with
+    spark.sql.shuffle.partitions set to :func:`sized_stream_partitions`
+    — read the stream from it and the state partitioning follows,
+    while the parent session's conf never changes. Every modifiable
+    conf of the parent is copied first, so runtime settings such as
+    ``session.tune()``'s timezone and nanosAsLong carry over. Apply
+    only to stateful-operator streams (window aggs, stream-stream
+    joins) — foreachBatch streams run batch jobs whose shuffles AQE
+    already coalesces, and Python-decode streams WANT full
+    parallelism."""
+    child = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    child.conf.set(
+        "spark.sql.shuffle.partitions", str(sized_stream_partitions(src_dirs, n_batches))
+    )
+    return child
 
 
 def write_stream_parquet(
@@ -680,6 +675,7 @@ def dedup_ingest_stream(
 
     Read the accumulated pair set with ``spark.read.parquet(pairs_path)``.
     """
+    from hadoop_main_spark.operators.checkpoints import ckpt_rdd_id, unpersist_rdd
     from hadoop_main_spark.operators.dedup import (
         lsh_pairs_across,
         lsh_pairs_from_signatures,
@@ -724,14 +720,10 @@ def dedup_ingest_stream(
             pairs.write.mode("overwrite").parquet(f"{pairs_path}/batch={batch_id}")
             sig.write.mode("overwrite").parquet(f"{sig_path}/batch={batch_id}")
         finally:
-            # release THIS batch's checkpoint blocks (read the rdd id
-            # off the plan, never a global persistent-RDD diff — the
+            # release THIS batch's checkpoint blocks (the
             # connected_components discipline); a long-running stream
             # would otherwise pin one cached RDD per micro-batch
-            rid = int(sig._jdf.queryExecution().analyzed().rdd().id())
-            m = spark.sparkContext._jsc.getPersistentRDDs()
-            if m.containsKey(rid):
-                m.get(rid).unpersist()
+            unpersist_rdd(spark, ckpt_rdd_id(sig))
 
     w = (
         docs_stream.writeStream.foreachBatch(merge)
@@ -1008,6 +1000,7 @@ def graph_insert_edges(
 
     from pyspark.sql import Window
 
+    from hadoop_main_spark.operators.checkpoints import run_checkpoint
     from hadoop_main_spark.operators.similarity import knn_graph_search
 
     n_wave = new.count()
@@ -1025,9 +1018,10 @@ def graph_insert_edges(
         # rows — without it every chunk would re-run the full-wave
         # window sort (W chunks → W re-sorts, the quadratic cost the
         # chunking exists to avoid).
-        ranked = new.withColumn(
-            "__rn", F.row_number().over(Window.orderBy(id_col))
-        ).localCheckpoint(eager=True)
+        ranked = run_checkpoint(
+            new.withColumn("__rn", F.row_number().over(Window.orderBy(id_col))),
+            eager=True,
+        )
         chunks = [
             ranked.filter(
                 (F.col("__rn") > c * max_wave)
@@ -1038,12 +1032,10 @@ def graph_insert_edges(
     parts = []
     for chunk in chunks:
         qs = chunk.select(F.col(id_col).alias("__qid"), vec_col)
-        # NO ckpt_tag here (advice r11 #1, resolved the other way): a
-        # caller may hold several graph_insert_edges results at once
-        # or chain a wave's output into the next wave's graph, so a
-        # stable tag would unpersist hop checkpoints a live plan still
-        # reads. The hop blocks stay pinned for the session — the
-        # documented deliberate pinning window for this path.
+        # a caller may hold several graph_insert_edges results at once
+        # or chain a wave's output into the next wave's graph: the hop
+        # checkpoints belong to the query run, which releases nothing
+        # before the same query builds again.
         res = knn_graph_search(
             edges, nodes, qs, k, beam, hops, entries,
             id_col, vec_col, query_id="__qid",

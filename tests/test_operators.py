@@ -1,6 +1,8 @@
 """Operator unit tests on tiny in-memory DataFrames — the pytest
 analog of the reference's JUnit operator layer (SURVEY.md §5.1)."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from hadoop_main_spark.functions.hashing import hash64, hash64_py
@@ -1569,23 +1571,43 @@ def test_bpe_apply_java_whitespace_parity(spark):
     assert got[1] == ["p", "\u2003", "q"]
 
 
-def test_iterative_query_checkpoints_superseded(spark, sf_dir):
-    """Rebuilding a lazy-checkpointing query releases the previous
-    build's pinned blocks: after N build+action cycles the session
-    holds at most one live checkpoint RDD per tag, not N
-    (review-r5)."""
+def test_iterative_query_checkpoints_superseded(spark, sf_dir, tmp_path, monkeypatch):
+    """Rebuilding a query releases its previous run: after N
+    build+action cycles the session holds ONE run's worth of new temp
+    entries and no checkpoint RDD of an earlier run (review-r5). Covers a roundtrip write-then-read gate, a
+    parity-wave stream, the MapFile gate, the k-core peel, the
+    beam-search hop pools, and the lazily checkpointed vocabulary /
+    graph tables."""
+    import tempfile
+
     from hadoop_main_spark.plans.registry import REGISTRY
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
 
     def persisted_ids():
         m = spark.sparkContext._jsc.getPersistentRDDs()
         return {int(k) for k in m.keySet().toArray()}
 
-    for name, n_tags in (("pmi_topk", 1), ("pagerank_top20", 2)):
-        before = persisted_ids()
+    for name in (
+        "har_roundtrip_agg",
+        "stream_cdc_roundtrip",
+        "mapfile_point_lookup",
+        "kcore_parts",
+        "knn_graph_search",
+        "pmi_topk",
+        "pagerank_top20",
+    ):
+        tmp0 = set(os.listdir(tmp_path))
+        new_rdds, new_tmp = [], []
         for _ in range(3):
+            before = persisted_ids()
             REGISTRY[name].build(spark, sf_dir).count()
-        new = persisted_ids() - before
-        assert len(new) <= n_tags, (name, sorted(new))
+            new_rdds.append(persisted_ids() - before)
+            new_tmp.append(len(set(os.listdir(tmp_path)) - tmp0))
+        # by id, not by count: the JVM keeps persisted RDDs weakly, so
+        # a GC may drop unreferenced ones at any time
+        assert not (new_rdds[0] | new_rdds[1]) & persisted_ids(), (name, new_rdds)
+        assert max(new_tmp) == new_tmp[0], (name, new_tmp)
 
 
 def test_prefix_jaccard_join_equals_bruteforce(spark):

@@ -155,6 +155,28 @@ def test_stream_parquet_sink_checkpointed(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == n
 
 
+def test_stream_session_sizes_child_not_parent(spark, tmp_path):
+    """stream_session's child gets the volume-sized shuffle partition
+    count and the parent's runtime confs (a non-default timezone
+    here); the parent's partition count never changes."""
+    from hadoop_main_spark.session import default_parallelism
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "part-0.parquet").write_bytes(b"x" * (2 * W.STREAM_TARGET_BYTES + 1))
+    (src / "_SUCCESS").write_bytes(b"")
+    key, tz_key = "spark.sql.shuffle.partitions", "spark.sql.session.timeZone"
+    parts, tz = spark.conf.get(key), spark.conf.get(tz_key)
+    spark.conf.set(tz_key, "America/Chicago")
+    try:
+        child = W.stream_session(spark, str(src), n_batches=1)
+    finally:
+        spark.conf.set(tz_key, tz)
+    assert child.conf.get(key) == str(min(default_parallelism(), 3))
+    assert child.conf.get(tz_key) == "America/Chicago"
+    assert spark.conf.get(key) == parts
+
+
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     from hadoop_main_spark.streaming.joins import interval_join
     from hadoop_main_spark.tables import load_table

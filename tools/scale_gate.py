@@ -39,6 +39,7 @@ sys.path.insert(0, _REPO)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bench import run_once
 from hadoop_main_spark.plans.registry import REGISTRY
 from hadoop_main_spark.session import get_spark
 from hadoop_main_spark.tables import TABLE_NAMES, data_fingerprint, load_table
@@ -401,18 +402,10 @@ build_10x = build_nx  # back-compat alias (tooling tests import it)
 
 
 def time_query(spark, name: str, sf_dir: str, runs: int = 2) -> float:
-    # build() + action timed together (optimization r12, verdict-r11
-    # #1): iterative operators run real compute inside build() via
-    # eager localCheckpoint(); timing only the sink under-reported
-    # them and produced <1.0 10x ratios (e.g. suffix_array_repeats'
-    # untimed suffix-array construction).
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        df = REGISTRY[name].build(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
+    # bench.run_once times build() + action together: a sink-only
+    # timer produced <1.0 10x ratios (e.g. suffix_array_repeats'
+    # untimed suffix-array construction)
+    return min(run_once(spark, name, sf_dir) for _ in range(runs))
 
 
 def main() -> int:

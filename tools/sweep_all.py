@@ -16,19 +16,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import run_once
 from hadoop_main_spark.plans.registry import REGISTRY
 from hadoop_main_spark.session import get_spark
-
-
-def run_once(spark, name: str, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    df = REGISTRY[name].build(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
 
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
