@@ -2599,7 +2599,7 @@ def nndescent_knn_graph(
     # the same subtree (the round-2 cache-hygiene advice) — the
     # connected_components discipline
     nbr = run_checkpoint(nbr, eager=True)
-    for _ in range(iterations):
+    for it in range(iterations):
         rev = nbr.select(F.col("nbr").alias("id"), F.col("id").alias("nbr"))
         nn2 = (
             nbr.alias("a")
@@ -2620,7 +2620,8 @@ def nndescent_knn_graph(
         out = scored.withColumn("rank", F.row_number().over(w)).filter(
             F.col("rank") <= k
         )
-        nbr = run_checkpoint(out.select("id", "nbr"), eager=True)
+        if it < iterations - 1:  # only the next iteration reads it
+            nbr = run_checkpoint(out.select("id", "nbr"), eager=True)
     return out.select(
         "id",
         F.col("rank").cast("bigint").alias("rank"),

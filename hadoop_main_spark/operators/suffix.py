@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hadoop_main_spark.operators.checkpoints import run_checkpoint
 from hadoop_main_spark.operators.sorting import global_rank
 from hadoop_main_spark.operators.transforms import tokenize
 
@@ -101,11 +102,17 @@ def suffix_ranks(
     # class competition rank = min row rank within the prefix class
     # (independent of tie order inside/between equal keys: every row
     # of a smaller class precedes every row of a larger one)
-    r = ranked.select(
-        "doc_id",
-        "pos",
-        F.min("rr").over(Window.partitionBy("p")).cast("bigint").alias("r"),
-    ).localCheckpoint()
+    # every round is a run checkpoint: the loop releases superseded
+    # rounds, and the last one, which the caller reads, belongs to the
+    # run, so the query's next build releases it
+    r = run_checkpoint(
+        ranked.select(
+            "doc_id",
+            "pos",
+            F.min("rr").over(Window.partitionBy("p")).cast("bigint").alias("r"),
+        ),
+        eager=True,
+    )
     prev_rid = ckpt_rdd_id(r)
     offset = init_prefix
     while offset < mx:
@@ -127,10 +134,9 @@ def suffix_ranks(
         sub = cnt.withColumn(
             "nr", (F.col("r") + F.sum("__n").over(w) - F.col("__n")).cast("bigint")
         ).select("r", "r2", "nr")
-        nxt = (
-            pr.join(sub, ["r", "r2"])
-            .select("doc_id", "pos", F.col("nr").alias("r"))
-            .localCheckpoint()
+        nxt = run_checkpoint(
+            pr.join(sub, ["r", "r2"]).select("doc_id", "pos", F.col("nr").alias("r")),
+            eager=True,
         )
         created = ckpt_rdd_id(nxt)
         unpersist_rdd(docs, prev_rid)
@@ -252,6 +258,6 @@ def suffix_repeats_indexed(
     # re-executing the whole join tree for range-boundary sampling
     # (optimization r11: the sampling pass doubled the bench time).
     # Lazy, so a fresh build pays the full compute inside the timed
-    # action; nothing persists across bench runs.
-    res = res.localCheckpoint(eager=False)
+    # action.
+    res = run_checkpoint(res)
     return res.filter(F.col("lcp") >= min_lcp)

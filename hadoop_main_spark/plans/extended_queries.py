@@ -19,6 +19,7 @@ from hadoop_main_spark.operators import joins as J
 from hadoop_main_spark.operators import sessions as SES
 from hadoop_main_spark.operators.checkpoints import run_tmpdir
 from hadoop_main_spark.plans.registry import query, t
+from hadoop_main_spark.streaming.windows import replay_stream, stage_waves
 
 _US_HOUR = 3_600_000_000
 _TWO60 = float(2**60)
@@ -549,15 +550,14 @@ def count_min_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     "sixth §2.12 certification — covers the additive-merge foreachBatch "
     "sink family: count-min/HLL/span-count share the high-water-mark + "
     "rename-aside-swap machinery this exercises): documents replay as "
-    "a 4-micro-batch file stream, each batch's token count-min table "
-    "merges ADDITIVELY into the parquet sketch (sum-merge is not "
+    "a 4-micro-batch file stream (doc_id mod 4), each batch's token "
+    "count-min table merges ADDITIVELY into the parquet sketch (sum-merge is not "
     "idempotent, so the checkpoint-scoped last_batch high-water mark "
     "is what a replayed batch bounces off), and the accumulated "
     "sketch probed for the true top-10 tokens must equal the one-shot "
     "batch sketch — count_min_heavy_hitters' oracle verbatim, the "
     "sketch-mergeability invariant. A double-merged replay or a "
-    "dropped batch moves a counter. BUILD-COST NOTE: this builder "
-    "EXECUTES the full streaming job at plan-build time.",
+    "dropped batch moves a counter.",
 )
 def stream_sketch_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.functions.sketches import count_min_probe
@@ -570,14 +570,10 @@ def stream_sketch_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = t(spark, sf, "documents").select("doc_id", "text")
     base = run_tmpdir("streamsk_")
-    src = f"{base}/src"
-    docs.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select(F.explode(tokenize("text")).alias("word"))
-    )
+    waves = [docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == k) for k in range(4)]
+    stream = replay_stream(
+        spark, stage_waves(waves, f"{base}/src"), docs.schema
+    ).select(F.explode(tokenize("text")).alias("word"))
     q = count_min_stream_parquet(stream, "word", f"{base}/sketch", f"{base}/ckpt")
     q.awaitTermination()
     sketch = read_count_min_sketch(spark, f"{base}/sketch")

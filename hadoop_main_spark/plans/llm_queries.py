@@ -17,6 +17,7 @@ from hadoop_main_spark.operators import similarity as SIM
 from hadoop_main_spark.operators import textstats as TS
 from hadoop_main_spark.operators.checkpoints import run_checkpoint, run_tmpdir
 from hadoop_main_spark.plans.registry import query, t
+from hadoop_main_spark.streaming.windows import replay_stream, stage_waves
 
 P = D.MINHASH_P
 J = D.NUM_HASHES
@@ -4421,15 +4422,9 @@ def _graph_stream_oracle(
     "graph build and every wave's search over the grown graph, "
     "entry points re-derived from the grown node set — the deepest "
     "CTE chain in the registry. A wave searching the wrong graph "
-    "state, a lost reverse link, or a replayed batch moves a row. "
-    "BUILD-COST NOTE: this builder EXECUTES the full streaming job "
-    "at plan-build time.",
+    "state, a lost reverse link, or a replayed batch moves a row.",
 )
 def stream_graph_insert_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-
     from hadoop_main_spark.streaming.windows import knn_graph_stream_parquet
 
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
@@ -4438,21 +4433,11 @@ def stream_graph_insert_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     SIM.build_knn_graph_index(
         e.filter(F.col("vec_id") >= 40), idx, k=5, iterations=2
     )
-    src = f"{root}/src"
-    os.makedirs(src)
-    for w, pred in ((0, F.col("vec_id") < 20),
-                    (1, (F.col("vec_id") >= 20) & (F.col("vec_id") < 40))):
-        part = f"{root}/part{w}"
-        e.filter(pred).coalesce(1).write.parquet(part)
-        (pf,) = glob.glob(f"{part}/part-*.parquet")
-        dst = f"{src}/w{w}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + w * 60,) * 2)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    waves = [
+        e.filter(F.col("vec_id") < 20),
+        e.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 40)),
+    ]
+    stream = replay_stream(spark, stage_waves(waves, f"{root}/src"), e.schema)
     q = knn_graph_stream_parquet(
         stream, idx, f"{root}/inc", f"{root}/ckpt",
         k=5, beam=12, hops=2, entries=4,
@@ -4465,27 +4450,6 @@ def stream_graph_insert_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         "nbr_id",
         "d2",
     )
-
-
-def _write_parity_waves(df, root: str, order_col: str = "vec_id") -> str:
-    """Two mtime-ordered single-file parquet waves (even ids then odd
-    ids) for maxFilesPerTrigger=1 streaming fixtures — wave w holds
-    rows with ``order_col % 2 == w``, so the oracle derives the batch
-    id in closed form (id parity)."""
-    import glob
-    import os
-    import shutil
-
-    src = f"{root}/src"
-    os.makedirs(src)
-    for w in (0, 1):
-        part = f"{root}/part{w}"
-        df.filter(F.pmod(F.col(order_col), F.lit(2)) == w).coalesce(1).write.parquet(part)
-        (pf,) = glob.glob(f"{part}/part-*.parquet")
-        dst = f"{src}/w{w}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + w * 60,) * 2)
-    return src
 
 
 @query(
@@ -4519,8 +4483,7 @@ def _write_parity_waves(df, root: str, order_col: str = "vec_id") -> str:
     "its batch lineage, must equal the oracle's seeded-codebook "
     "argmin replay with batch derived from id parity. A re-encoded "
     "corpus row, a wave landing in the wrong partition, or a replay "
-    "that double-writes moves a row. BUILD-COST NOTE: executes the "
-    "streaming job at plan-build time.",
+    "that double-writes moves a row.",
 )
 def stream_pq_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.streaming.windows import pq_codes_stream_parquet
@@ -4528,12 +4491,8 @@ def stream_pq_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     e = t(spark, sf, "embeddings").select("vec_id", "embedding")
     cb, _ = SIM.pq_codebook(e)
     root = run_tmpdir("streampq_")
-    src = _write_parity_waves(e, root)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    waves = [e.filter(F.pmod(F.col("vec_id"), F.lit(2)) == w) for w in (0, 1)]
+    stream = replay_stream(spark, stage_waves(waves, f"{root}/src"), e.schema)
     q = pq_codes_stream_parquet(stream, cb, f"{root}/codes", f"{root}/ckpt")
     q.awaitTermination()
     return (
@@ -4611,8 +4570,7 @@ def stream_pq_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "residuals -> seed-residual codebook -> per-subspace argmin, "
     "batch from id parity. A wrong cell route (centroid drift), a "
     "residual computed against the wrong centroid grid, or a replay "
-    "double-write moves a row. BUILD-COST NOTE: builds the index AND "
-    "executes the streaming job at plan-build time.",
+    "double-write moves a row.",
 )
 def stream_residual_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.streaming.windows import residual_codes_stream_parquet
@@ -4621,12 +4579,9 @@ def stream_residual_codes_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     root = run_tmpdir("streamres_")
     idx = f"{root}/idx"
     SIM.build_ivfpq_residual_index(e, idx, "label")
-    src = _write_parity_waves(e.select("vec_id", "embedding"), root)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    v = e.select("vec_id", "embedding")
+    waves = [v.filter(F.pmod(F.col("vec_id"), F.lit(2)) == w) for w in (0, 1)]
+    stream = replay_stream(spark, stage_waves(waves, f"{root}/src"), v.schema)
     q = residual_codes_stream_parquet(stream, idx, f"{root}/ckpt")
     q.awaitTermination()
     return (
@@ -6836,20 +6791,16 @@ def weighted_doc_sample(spark: SparkSession, sf: str) -> DataFrame:
     "per-language dedup stats must equal the batch closed-form "
     "oracle VERBATIM: a chunk lost at a batch boundary, a replayed "
     "double-write, or any stream-vs-batch boundary divergence moves "
-    "a count. BUILD-COST NOTE: executes the streaming job at "
-    "plan-build time.",
+    "a count.",
 )
 def stream_cdc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.streaming.windows import cdc_chunks_stream_parquet
 
     d = t(spark, sf, "documents")
     root = run_tmpdir("streamcdc_")
-    src = _write_parity_waves(d.select("doc_id", "text"), root, "doc_id")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    v = d.select("doc_id", "text")
+    waves = [v.filter(F.pmod(F.col("doc_id"), F.lit(2)) == w) for w in (0, 1)]
+    stream = replay_stream(spark, stage_waves(waves, f"{root}/src"), v.schema)
     q = cdc_chunks_stream_parquet(stream, f"{root}/out", f"{root}/ckpt")
     q.awaitTermination()
     ch = spark.read.parquet(f"{root}/out")
@@ -7250,9 +7201,7 @@ def sorted_neighborhood_dedup(spark: SparkSession, sf: str) -> DataFrame:
     "additive merge is not idempotent — and the MAINTAINED view "
     "must equal the from-scratch GROUP BY over all events VERBATIM "
     "(one-shot equality): a double-applied wave, a lost view key at "
-    "a batch boundary, or a combine-algebra error moves a count. "
-    "BUILD-COST NOTE: executes the streaming job at plan-build "
-    "time.",
+    "a batch boundary, or a combine-algebra error moves a count.",
 )
 def stream_agg_view_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.streaming.windows import (
@@ -7264,14 +7213,8 @@ def stream_agg_view_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         "user_id", "event_type", "event_id", "value"
     )
     root = run_tmpdir("streamaggview_")
-    src = _write_parity_waves(e, root, "event_id")
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_type string, event_id long, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    waves = [e.filter(F.pmod(F.col("event_id"), F.lit(2)) == w) for w in (0, 1)]
+    stream = replay_stream(spark, stage_waves(waves, f"{root}/src"), e.schema)
     q = agg_view_stream_parquet(stream, f"{root}/out", f"{root}/ckpt")
     q.awaitTermination()
     return read_agg_view(spark, f"{root}/out").orderBy("user_id", "event_type")

@@ -17,6 +17,11 @@ from hadoop_main_spark.operators import multimodal as MM
 from hadoop_main_spark.operators import pipe as PIPE
 from hadoop_main_spark.operators.checkpoints import run_checkpoint, run_tmpdir
 from hadoop_main_spark.plans.registry import query, t
+from hadoop_main_spark.streaming.windows import (
+    replay_stream,
+    stage_waves,
+    start_foreach_batch,
+)
 
 
 def _codec_ids(spark: SparkSession, sf: str) -> DataFrame:
@@ -1545,8 +1550,8 @@ def _stream_dedup_oracle() -> str:
     oracle=_stream_dedup_oracle(),
     doc="Structured Streaming ON the driver gate (verdict-r7 #1, the "
     "roundtrip-agg pattern applied to §2.12): documents are split "
-    "into 4 parquet files, replayed as a REAL multi-micro-batch file "
-    "stream (maxFilesPerTrigger=1, availableNow), and fed through "
+    "into 4 waves (doc_id mod 4), replayed as a REAL multi-micro-batch "
+    "file stream (one file per trigger, availableNow), and fed through "
     "the full production ingest-dedup loop (dedup_ingest_stream: "
     "per-batch MinHash signatures, within-batch LSH pairs, "
     "cross-batch banded probe against the accumulated signature "
@@ -1556,10 +1561,6 @@ def _stream_dedup_oracle() -> str:
     "union-over-batch-partitions invariant — so the oracle is "
     "dedup_minhash_lsh's oracle verbatim; any watermark, "
     "checkpoint-replay, or cross-batch-probe bug surfaces as a "
-    "BUILD-COST NOTE: this builder EXECUTES the full streaming job "
-    "at plan-build time (write + awaitTermination) and returns a "
-    "batch read of the sink — plans-only tooling (dump_plans, "
-    "plan_lint) pays a multi-second stream execution per call. "
     "missing/duplicated pair.",
 )
 def stream_dedup_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
@@ -1567,14 +1568,11 @@ def stream_dedup_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
     d = t(spark, sf, "documents").select("doc_id", "text")
     base = run_tmpdir("streamrt_")
-    src = f"{base}/src"
-    # 4 source files -> 4 genuine micro-batches; which docs land in
-    # which batch is irrelevant by the union invariant
-    d.repartition(4).write.parquet(src)
+    # 4 waves -> 4 genuine micro-batches; which docs land in which
+    # batch is irrelevant by the union invariant
+    waves = [d.filter(F.pmod(F.col("doc_id"), F.lit(4)) == k) for k in range(4)]
     q = dedup_ingest_stream(
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src),
+        replay_stream(spark, stage_waves(waves, f"{base}/src"), waves[0].schema),
         "doc_id",
         "text",
         sig_path=f"{base}/sigs",
@@ -1729,46 +1727,23 @@ def audio_container_meta(spark: SparkSession, sf: str) -> DataFrame:
     return MM.audio_container_meta(media)
 
 
-def _timesplit_files(df: DataFrame, ts_col: str, src: str, parts: int = 4) -> str:
-    """Stage ``df`` in ``src`` for a ``parts``-micro-batch replay in
-    EVENT-TIME order: contiguous time-range slices, one single-file
-    batch each, mtimes strictly increasing so FileStreamSource (oldest-
-    first) feeds them in order — the watermark-contract replay shared
-    by every stream_*_roundtrip driver gate. Returns ``src``; read it
-    with :func:`_replay`."""
+def _time_quartiles(df: DataFrame, ts_col: str) -> list[DataFrame]:
+    """``df`` as 4 contiguous event-time slices, oldest first — staged
+    by :func:`stage_waves`, they replay in EVENT-TIME order, the
+    watermark-contract replay of the event-time stream gates."""
     import datetime
-    import glob
-    import os
-    import shutil
 
-    os.makedirs(src)
     lo, hi = df.agg(F.min(ts_col), F.max(ts_col)).first()
     span = (hi - lo).total_seconds()
-    for k in range(parts):
-        a = lo if k == 0 else lo + datetime.timedelta(seconds=span * k / parts)
-        b = hi if k == parts - 1 else lo + datetime.timedelta(
-            seconds=span * (k + 1) / parts
-        )
+    waves = []
+    for k in range(4):
+        a = lo if k == 0 else lo + datetime.timedelta(seconds=span * k / 4)
+        b = hi if k == 3 else lo + datetime.timedelta(seconds=span * (k + 1) / 4)
         cond = (F.col(ts_col) >= F.lit(a)) & (
-            F.col(ts_col) <= F.lit(b) if k == parts - 1 else F.col(ts_col) < F.lit(b)
+            F.col(ts_col) <= F.lit(b) if k == 3 else F.col(ts_col) < F.lit(b)
         )
-        part_dir = f"{src}__part{k}"
-        df.filter(cond).coalesce(1).write.parquet(part_dir)
-        (pf,) = glob.glob(f"{part_dir}/part-*.parquet")
-        dst = f"{src}/q{k}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + k * 60, 1_700_000_000 + k * 60))
-    return src
-
-
-def _replay(spark: SparkSession, src: str) -> DataFrame:
-    """One-file-per-micro-batch stream over the parquet files in
-    ``src``."""
-    return (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+        waves.append(df.filter(cond))
+    return waves
 
 
 @query(
@@ -1802,10 +1777,6 @@ def _replay(spark: SparkSession, src: str) -> DataFrame:
     "of the corpus late beyond any finite watermark and append mode "
     "rightly DROPS it (measured: 2711 of 3370 windows survive a "
     "random 4-way split), which is exactly the semantics the "
-    "BUILD-COST NOTE: this builder EXECUTES the full streaming job "
-    "at plan-build time (write + awaitTermination) and returns a "
-    "batch read of the sink — plans-only tooling (dump_plans, "
-    "plan_lint) pays a multi-second stream execution per call. "
     "watermark promises, not a bug.",
 )
 def stream_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
@@ -1817,10 +1788,10 @@ def stream_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
     e = t(spark, sf, "events")
     base = run_tmpdir("streamwrt_")
-    src = _timesplit_files(e, "ts", f"{base}/src")
+    src = stage_waves(_time_quartiles(e, "ts"), f"{base}/src")
     # volume-derived state partitioning for the stateful window agg
     # (optimization r12; see sized_stream_partitions)
-    stream = _replay(stream_session(spark, src, n_batches=4), src)
+    stream = replay_stream(stream_session(spark, src), src, e.schema)
     q = write_stream_parquet(
         tumbling_counts(stream, window="1 hour", watermark="2 hours"),
         f"{base}/out",
@@ -1866,10 +1837,6 @@ def stream_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "set — per (user, session_start) the greatest emission; closed "
     "beats open — must equal the batch sessionize oracle PER SESSION "
     "(start/end/n exact), not just per user. A state carry, batch-"
-    "BUILD-COST NOTE: this builder EXECUTES the full streaming job "
-    "at plan-build time (write + awaitTermination) and returns a "
-    "batch read of the sink — plans-only tooling (dump_plans, "
-    "plan_lint) pays a multi-second stream execution per call. "
     "boundary merge, or session-splitting bug moves rows.",
 )
 def stream_session_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
@@ -1878,7 +1845,8 @@ def stream_session_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
     e = t(spark, sf, "events").select("user_id", "ts", "event_id")
     base = run_tmpdir("streamsess_")
-    stream = _replay(spark, _timesplit_files(e, "ts", f"{base}/src"))
+    src = stage_waves(_time_quartiles(e, "ts"), f"{base}/src")
+    stream = replay_stream(spark, src, e.schema)
     out = f"{base}/out"
 
     def sink(batch: DataFrame, batch_id: int) -> None:
@@ -1889,13 +1857,8 @@ def stream_session_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     # the state partitioning serializes that compute; unlike the
     # JVM-native window/join state whose per-partition store machinery
     # dominates at fixture scale, this one wants the parallelism.
-    q = (
-        gap_sessions(stream, "user_id", "ts", "event_id")
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    q = start_foreach_batch(
+        gap_sessions(stream, "user_id", "ts", "event_id"), sink, f"{base}/ckpt"
     )
     q.awaitTermination()
     emitted = spark.read.parquet(out)
@@ -1926,10 +1889,6 @@ def stream_session_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "state stores) into an append parquet sink; the emitted pair set "
     "must equal the batch range join exactly. Cross-batch pairs — a "
     "click in quartile k matching a purchase in k+1 — certify the "
-    "BUILD-COST NOTE: this builder EXECUTES the full streaming job "
-    "at plan-build time (write + awaitTermination) and returns a "
-    "batch read of the sink — plans-only tooling (dump_plans, "
-    "plan_lint) pays a multi-second stream execution per call. "
     "join state survives exactly as long as the watermark promises; "
     "a premature state eviction or a dropped late row moves pairs.",
 )
@@ -1945,12 +1904,16 @@ def stream_interval_join_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     buys = e.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("r_ts"), F.col("event_id").alias("purchase_id")
     )
-    src_l = _timesplit_files(clicks, "l_ts", f"{base}/src_l")
-    src_r = _timesplit_files(buys, "r_ts", f"{base}/src_r")
+    src_l = stage_waves(_time_quartiles(clicks, "l_ts"), f"{base}/src_l")
+    src_r = stage_waves(_time_quartiles(buys, "r_ts"), f"{base}/src_r")
     # volume-derived state partitioning for the stream-stream join
     # state (optimization r12; see sized_stream_partitions)
-    child = stream_session(spark, [src_l, src_r], n_batches=4)
-    j = interval_join(_replay(child, src_l), _replay(child, src_r), "user_id")
+    child = stream_session(spark, [src_l, src_r])
+    j = interval_join(
+        replay_stream(child, src_l, clicks.schema),
+        replay_stream(child, src_r, buys.schema),
+        "user_id",
+    )
     q = write_stream_parquet(
         j.select("click_id", "purchase_id"), f"{base}/out", f"{base}/ckpt"
     )
@@ -1969,32 +1932,30 @@ def stream_interval_join_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     doc="Per-key RUNNING state ON the driver gate (the fifth §2.12 "
     "certification; completes stateful.py — gap_sessions is gated by "
     "stream_session_roundtrip, this gates running_totals): events "
-    "replay as a 4-micro-batch file stream (any split — totals "
-    "commute) through the applyInPandasWithState running (count, sum) "
-    "fold on an EXACT integer grid (value is on the 1-cent grid, so "
-    "summing cents keeps cross-engine float parity regardless of "
-    "accumulation order), per-batch partition-overwrite sink, and the "
-    "LAST emission per key — n_events strictly grows, so max wins — "
+    "replay as a 4-micro-batch file stream (event_id mod 4; any "
+    "split — totals commute) through the applyInPandasWithState "
+    "running (count, sum) fold on an EXACT integer grid (value is on "
+    "the 1-cent grid, so summing cents keeps cross-engine float "
+    "parity regardless of accumulation order), per-batch "
+    "partition-overwrite sink, and the LAST emission per key — n_events strictly grows, so max wins — "
     "must equal the batch groupBy exactly. A lost batch, a stale "
-    "state read, or a double-applied replay moves a count. "
-    "BUILD-COST NOTE: this builder EXECUTES the full streaming job "
-    "at plan-build time.",
+    "state read, or a double-applied replay moves a count.",
 )
 def stream_running_totals_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
     from hadoop_main_spark.streaming.stateful import running_totals
 
     e = t(spark, sf, "events").select(
-        "user_id", F.round(F.col("value") * 100).cast("long").alias("cents")
+        "event_id",
+        "user_id",
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     base = run_tmpdir("streamrun_")
-    src = f"{base}/src"
-    e.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    waves = [
+        e.filter(F.pmod(F.col("event_id"), F.lit(4)) == k).drop("event_id")
+        for k in range(4)
+    ]
+    stream = replay_stream(spark, stage_waves(waves, f"{base}/src"), waves[0].schema)
     out = f"{base}/out"
 
     def sink(batch: DataFrame, batch_id: int) -> None:
@@ -2004,13 +1965,8 @@ def stream_running_totals_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     # applyInPandasWithState does real per-key Python work — shrinking
     # the state partitioning serializes that compute (see the
     # stream_session_roundtrip note).
-    q = (
-        running_totals(stream, "user_id", "cents")
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    q = start_foreach_batch(
+        running_totals(stream, "user_id", "cents"), sink, f"{base}/ckpt"
     )
     q.awaitTermination()
     emitted = spark.read.parquet(out)
@@ -2050,8 +2006,7 @@ def stream_running_totals_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "append-mode exactly-once sink; each event lands in exactly two "
     "windows (the unnest([0,1]) expansion in the oracle) and the sink "
     "must hold exactly the windows with window_end <= max(ts) - 4h "
-    "with batch-identical decimal-exact averages. BUILD-COST NOTE: "
-    "this builder EXECUTES the full streaming job at plan-build time.",
+    "with batch-identical decimal-exact averages.",
 )
 def stream_sliding_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.streaming.windows import (
@@ -2062,10 +2017,10 @@ def stream_sliding_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
     e = t(spark, sf, "events")
     base = run_tmpdir("streamslw_")
-    src = _timesplit_files(e, "ts", f"{base}/src")
+    src = stage_waves(_time_quartiles(e, "ts"), f"{base}/src")
     # volume-derived state partitioning for the sliding-window agg
     # (optimization r12; see sized_stream_partitions)
-    stream = _replay(stream_session(spark, src, n_batches=4), src)
+    stream = replay_stream(stream_session(spark, src), src, e.schema)
     q = write_stream_parquet(
         sliding_avg(stream, window="2 hours", slide="1 hour", watermark="4 hours"),
         f"{base}/out",
@@ -2101,38 +2056,20 @@ def stream_sliding_window_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "row from the LAST batch containing that user — which the oracle "
     "recomputes from the mod-4 split in closed form. A lost "
     "accumulated key, a stale read of the being-replaced dir, or a "
-    "double-applied replay moves a row. BUILD-COST NOTE: this "
-    "builder EXECUTES the full streaming job at plan-build time.",
+    "double-applied replay moves a row.",
 )
 def stream_upsert_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-
     from hadoop_main_spark.streaming.windows import upsert_stream_parquet
 
     e = t(spark, sf, "events").select("user_id", "event_id", "ts")
     base = run_tmpdir("streamup_")
-    src = f"{base}/src"
-    os.makedirs(src)
-    for k in range(4):
-        part_dir = f"{base}/part{k}"
-        (
-            e.filter(F.col("event_id") % 4 == k)
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n_events"), F.max("ts").alias("max_ts"))
-            .coalesce(1)
-            .write.parquet(part_dir)
-        )
-        (pf,) = glob.glob(f"{part_dir}/part-*.parquet")
-        dst = f"{src}/q{k}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + k * 60,) * 2)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    waves = [
+        e.filter(F.col("event_id") % 4 == k)
+        .groupBy("user_id")
+        .agg(F.count("*").alias("n_events"), F.max("ts").alias("max_ts"))
+        for k in range(4)
+    ]
+    stream = replay_stream(spark, stage_waves(waves, f"{base}/src"), waves[0].schema)
     q = upsert_stream_parquet(stream, f"{base}/out", f"{base}/ckpt", key="user_id")
     q.awaitTermination()
     return spark.read.parquet(f"{base}/out").select(
@@ -2861,14 +2798,9 @@ def pdf15_text_extract(spark: SparkSession, sf: str) -> DataFrame:
     "exactly-once file sink — and the accumulated sink must equal "
     "pdf_text_extract's closed-form oracle VERBATIM: a record lost "
     "at a batch boundary, a replayed file double-write, or any "
-    "stream-vs-batch walker divergence moves a row. BUILD-COST NOTE: "
-    "executes the streaming job at plan-build time.",
+    "stream-vs-batch walker divergence moves a row.",
 )
 def stream_pdf_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-
     import pandas as pd
 
     from hadoop_main_spark.sources.pdf import pdf_encode
@@ -2888,22 +2820,8 @@ def stream_pdf_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
     media = docs.mapInPandas(gen, "media_id long, payload binary")
     base = run_tmpdir("streampdf_")
-    src = f"{base}/src"
-    os.makedirs(src)
-    for w in (0, 1):
-        part_dir = f"{base}/part{w}"
-        media.filter(F.pmod(F.col("media_id"), F.lit(2)) == w).coalesce(
-            1
-        ).write.parquet(part_dir)
-        (pf,) = glob.glob(f"{part_dir}/part-*.parquet")
-        dst = f"{src}/w{w}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + w * 60,) * 2)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    waves = [media.filter(F.pmod(F.col("media_id"), F.lit(2)) == w) for w in (0, 1)]
+    stream = replay_stream(spark, stage_waves(waves, f"{base}/src"), media.schema)
     q = pdf_meta_stream(stream, f"{base}/out", f"{base}/ckpt")
     q.awaitTermination()
     return spark.read.parquet(f"{base}/out").select(
@@ -3354,33 +3272,15 @@ def html_link_graph(spark: SparkSession, sf: str) -> DataFrame:
     "— warc_ingest_meta's byte-exact oracle, shared verbatim: a "
     "record lost at a batch boundary, a replayed file, or any "
     "divergence between the streaming and batch code paths moves a "
-    "row. BUILD-COST NOTE: this builder EXECUTES the full streaming "
-    "job at plan-build time — plans-only tooling (dump_plans, "
-    "plan_lint) pays a multi-second stream execution per call.",
+    "row.",
 )
 def stream_warc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-
     from hadoop_main_spark.streaming.windows import warc_records_stream_parquet
 
     media = _warc_media(spark, sf)
     base = run_tmpdir("streamwarc_")
-    src = f"{base}/src"
-    os.makedirs(src)
-    for k in range(4):
-        part_dir = f"{base}/part{k}"
-        media.filter(F.col("media_id") % 4 == k).coalesce(1).write.parquet(part_dir)
-        (pf,) = glob.glob(f"{part_dir}/part-*.parquet")
-        dst = f"{src}/q{k}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + k * 60,) * 2)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    waves = [media.filter(F.col("media_id") % 4 == k) for k in range(4)]
+    stream = replay_stream(spark, stage_waves(waves, f"{base}/src"), media.schema)
     q = warc_records_stream_parquet(stream, f"{base}/out", f"{base}/ckpt")
     q.awaitTermination()
     return spark.read.parquet(f"{base}/out").select(
@@ -3425,14 +3325,9 @@ def stream_warc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "means must equal png_decode_features' closed-form oracle "
     "(pixel rows are (doc_id*31 + r) % 256). A dropped wave, a "
     "replayed file double-write, or any stream-vs-batch decoder "
-    "divergence moves a row. BUILD-COST NOTE: executes the streaming "
-    "job at plan-build time.",
+    "divergence moves a row.",
 )
 def stream_media_features_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-
     import pandas as pd
 
     from hadoop_main_spark.streaming.windows import media_features_stream
@@ -3458,22 +3353,8 @@ def stream_media_features_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
     media = docs.mapInPandas(gen, "media_id long, payload binary")
     base = run_tmpdir("streammedia_")
-    src = f"{base}/src"
-    os.makedirs(src)
-    for w in (0, 1):
-        part_dir = f"{base}/part{w}"
-        media.filter(F.pmod(F.col("media_id"), F.lit(2)) == w).coalesce(
-            1
-        ).write.parquet(part_dir)
-        (pf,) = glob.glob(f"{part_dir}/part-*.parquet")
-        dst = f"{src}/w{w}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + w * 60,) * 2)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    waves = [media.filter(F.pmod(F.col("media_id"), F.lit(2)) == w) for w in (0, 1)]
+    stream = replay_stream(spark, stage_waves(waves, f"{base}/src"), media.schema)
     q = media_features_stream(
         stream, f"{base}/out", f"{base}/ckpt", decoder="png", dim=4
     )

@@ -23,6 +23,12 @@ once. Persisted indexes (``_index_dir``) outlive runs on purpose.
 The run dirs are made on the driver and opened by executors too:
 local mode shares one filesystem; on a cluster they must sit on a
 shared FS.
+
+Build cost: a ``stream_*_roundtrip`` build runs its stream to
+completion inside build() (stage the waves, drain them with
+availableNow) and returns a batch read of the sink, so plan-only
+tools (``tools/dump_plans.py``, ``tools/plan_lint.py``) pay for that
+execution.
 """
 
 from __future__ import annotations

@@ -26,9 +26,7 @@ def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def read_table_stream(
-    spark: SparkSession, sf_dir: str, table: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def read_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """File-source stream over any TESTDATA table parquet. Spark file
     streams require a *directory*; the fixture is a single file, so we
     stage a symlink dir (at real scale the source is already a growing
@@ -62,12 +60,7 @@ def read_table_stream(
             os.remove(link)
         if not os.path.exists(link):
             os.symlink(src, link)
-    batch = spark.read.parquet(src)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(stream_dir)
-    )
+    stream = replay_stream(spark, stream_dir, spark.read.parquet(src).schema)
     ts_type = dict(stream.dtypes).get("ts")
     if ts_type == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -78,12 +71,10 @@ def read_table_stream(
     return stream
 
 
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (see
     :func:`read_table_stream`)."""
-    return read_table_stream(spark, sf_dir, "events", max_files_per_trigger)
+    return read_table_stream(spark, sf_dir, "events")
 
 
 def tumbling_counts(
@@ -186,15 +177,63 @@ def run_to_memory(
         raise TimeoutError(f"stream '{name}' did not finish in {timeout_s}s")
 
 
+def stage_waves(waves: list[DataFrame], src: str) -> str:
+    """Stage ``waves`` in the new dir ``src`` for :func:`replay_stream`:
+    wave k becomes the one parquet file ``w{k}.parquet`` with an mtime
+    60 s after wave k-1's, so the file source (oldest files first,
+    one per micro-batch) feeds it as batch k. Each wave is written
+    with coalesce(1) to a sibling dir that is removed once its part
+    file has moved. Returns ``src``."""
+    import glob
+    import os
+    import shutil
+
+    os.makedirs(src)
+    for k, wave in enumerate(waves):
+        part = f"{src}__w{k}"
+        wave.coalesce(1).write.parquet(part)
+        (pf,) = glob.glob(f"{part}/part-*.parquet")
+        dst = f"{src}/w{k}.parquet"
+        shutil.move(pf, dst)
+        os.utime(dst, (1_700_000_000 + 60 * k,) * 2)
+        shutil.rmtree(part)
+    return src
+
+
+def replay_stream(spark: SparkSession, src: str, schema) -> DataFrame:
+    """The file stream over the parquet files in ``src``, one file per
+    micro-batch, oldest mtime first. ``schema`` (a StructType or DDL
+    string) is the staged frames' schema: passing it skips the
+    inference job a schema-less file stream would need."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+
+
+def start_foreach_batch(stream_df: DataFrame, fn, checkpoint: str):
+    """Start ``fn(batch, batch_id)`` on every micro-batch of
+    ``stream_df`` (update mode, commit log at ``checkpoint``) and
+    drain what the source holds now (availableNow). Returns the
+    StreamingQuery; caller awaits/stops it."""
+    return (
+        stream_df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 #: source bytes per state partition for :func:`sized_stream_partitions`
 STREAM_TARGET_BYTES = 4 << 20
 
 
-def sized_stream_partitions(src_dirs, n_batches: int = 1) -> int:
+def sized_stream_partitions(src_dirs) -> int:
     """Volume-derived shuffle/state partition count for a replayed
     file stream (optimization r12, guide §2: derive partitioning from
     input size, never a constant): ceil(per-batch source bytes /
-    STREAM_TARGET_BYTES), clamped to [1, default_parallelism].
+    STREAM_TARGET_BYTES), clamped to [1, default_parallelism]. A
+    replay feeds one file per micro-batch and the dirs replay side by
+    side, so the batch count is the largest number of data files in
+    any one of ``src_dirs``.
 
     Why streams need this when batch does not: stateful operators pin
     their state partitioning to spark.sql.shuffle.partitions at the
@@ -215,20 +254,25 @@ def sized_stream_partitions(src_dirs, n_batches: int = 1) -> int:
 
     if isinstance(src_dirs, str):
         src_dirs = [src_dirs]
-    total = 0
+    total, batches = 0, 1
     for d in src_dirs:
-        for root, _dirs, files in os.walk(d):
-            for f in files:
-                if not f.startswith(("_", ".")):
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-    per_batch = total / max(1, n_batches)
+        files = [
+            os.path.join(root, f)
+            for root, _dirs, names in os.walk(d)
+            for f in names
+            if not f.startswith(("_", "."))
+        ]
+        batches = max(batches, len(files))
+        for f in files:
+            try:
+                total += os.path.getsize(f)
+            except OSError:
+                pass
+    per_batch = total / batches
     return max(1, min(default_parallelism(), math.ceil(per_batch / STREAM_TARGET_BYTES)))
 
 
-def stream_session(spark: SparkSession, src_dirs, n_batches: int = 1) -> SparkSession:
+def stream_session(spark: SparkSession, src_dirs) -> SparkSession:
     """A child session (``spark.newSession()``: own SQL conf, shared
     SparkContext) for a NATIVE-stateful replay stream, with
     spark.sql.shuffle.partitions set to :func:`sized_stream_partitions`
@@ -245,30 +289,24 @@ def stream_session(spark: SparkSession, src_dirs, n_batches: int = 1) -> SparkSe
         if spark.conf.isModifiable(key):
             child.conf.set(key, value)
     child.conf.set(
-        "spark.sql.shuffle.partitions", str(sized_stream_partitions(src_dirs, n_batches))
+        "spark.sql.shuffle.partitions", str(sized_stream_partitions(src_dirs))
     )
     return child
 
 
-def write_stream_parquet(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_available_now: bool = True,
-):
+def write_stream_parquet(stream_df: DataFrame, path: str, checkpoint: str):
     """Production file sink: append-mode parquet with a checkpoint dir
     (exactly-once via the streaming commit log — the FileOutputCommitter
-    role in the streaming world). Returns the StreamingQuery; caller
-    awaits/stops it."""
-    w = (
+    role in the streaming world), drained with availableNow. Returns
+    the StreamingQuery; caller awaits/stops it."""
+    return (
         stream_df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def media_features_stream(
@@ -277,7 +315,6 @@ def media_features_stream(
     checkpoint: str,
     decoder: str = "stub",
     dim: int = 8,
-    trigger_available_now: bool = True,
 ):
     """Streaming multimodal ingest: decode + feature-extract binary
     payloads AS THEY ARRIVE. extract_features is a stateless
@@ -291,17 +328,10 @@ def media_features_stream(
     from hadoop_main_spark.operators.multimodal import extract_features
 
     feats = extract_features(media_stream, decoder=decoder, dim=dim)
-    return write_stream_parquet(
-        feats, path, checkpoint, trigger_available_now=trigger_available_now
-    )
+    return write_stream_parquet(feats, path, checkpoint)
 
 
-def pdf_meta_stream(
-    media_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_available_now: bool = True,
-):
+def pdf_meta_stream(media_stream: DataFrame, path: str, checkpoint: str):
     """Streaming PDF ingest: the stateless container walk + text
     extraction (sources/pdf.py:pdf_meta — xref-verified object visit,
     BT..ET literal decode) runs unchanged inside Structured Streaming
@@ -311,10 +341,7 @@ def pdf_meta_stream(
     document-ingest run resumes from the commit log."""
     from hadoop_main_spark.sources.pdf import pdf_meta
 
-    return write_stream_parquet(
-        pdf_meta(media_stream), path, checkpoint,
-        trigger_available_now=trigger_available_now,
-    )
+    return write_stream_parquet(pdf_meta(media_stream), path, checkpoint)
 
 
 def _jpath(spark, p: str):
@@ -394,7 +421,6 @@ def upsert_stream_parquet(
     path: str,
     checkpoint: str,
     key: str,
-    trigger_available_now: bool = True,
 ):
     """foreachBatch keyed upsert: each micro-batch replaces existing
     rows with the same key (last write wins within a batch by
@@ -431,14 +457,7 @@ def upsert_stream_parquet(
         # accumulated state
         _replace_dir_safely(spark, merged, path, batch_id)
 
-    w = (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(stream_df, merge, checkpoint)
 
 
 def hll_sketch_stream_parquet(
@@ -446,7 +465,6 @@ def hll_sketch_stream_parquet(
     col: str,
     path: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ):
     """Streaming distinct-count sketch sink: each micro-batch's
     HyperLogLog registers are max-merged into a parquet register table
@@ -487,14 +505,7 @@ def hll_sketch_stream_parquet(
             batch_id,
         )
 
-    w = (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(stream_df, merge, checkpoint)
 
 
 def dedup_stream_minhash(docs_stream: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -541,7 +552,6 @@ def span_counts_stream_parquet(
     path: str,
     checkpoint: str,
     window: int = 20,
-    trigger_available_now: bool = True,
 ):
     """Streaming cross-document repeated-span accumulation: each
     micro-batch's rolling-window span hashes aggregate to partial
@@ -617,14 +627,7 @@ def span_counts_stream_parquet(
             batch_id,
         )
 
-    w = (
-        docs_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(docs_stream, merge, checkpoint)
 
 
 def read_span_counts(spark: SparkSession, path: str, min_docs: int = 2) -> DataFrame:
@@ -648,7 +651,6 @@ def dedup_ingest_stream(
     pairs_path: str,
     checkpoint: str,
     min_est_jaccard: float = 0.5,
-    trigger_available_now: bool = True,
 ):
     """The FULL production ingest-dedup loop as one stream: every
     micro-batch (a) computes its MinHash signatures, (b) finds
@@ -725,14 +727,7 @@ def dedup_ingest_stream(
             # would otherwise pin one cached RDD per micro-batch
             unpersist_rdd(spark, ckpt_rdd_id(sig))
 
-    w = (
-        docs_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(docs_stream, merge, checkpoint)
 
 
 def count_min_stream_parquet(
@@ -742,7 +737,6 @@ def count_min_stream_parquet(
     checkpoint: str,
     depth: int | None = None,
     width: int | None = None,
-    trigger_available_now: bool = True,
 ):
     """Streaming frequency sketch sink: each micro-batch's count-min
     table (functions/sketches.py — depth hash rows x width integer
@@ -821,14 +815,7 @@ def count_min_stream_parquet(
             batch_id,
         )
 
-    w = (
-        stream_df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(stream_df, merge, checkpoint)
 
 
 def read_count_min_sketch(spark: SparkSession, path: str) -> DataFrame:
@@ -852,7 +839,6 @@ def pq_codes_stream_parquet(
     checkpoint: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    trigger_available_now: bool = True,
 ):
     """Incremental PQ index maintenance (the ANN twin of
     dedup_ingest_stream): each arriving vector micro-batch encodes to
@@ -877,14 +863,7 @@ def pq_codes_stream_parquet(
         enc = pq_encode(batch.select(id_col, vec_col), codebook, id_col, vec_col)
         enc.write.mode("overwrite").parquet(f"{path}/batch={batch_id}")
 
-    w = (
-        vec_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(vec_stream, merge, checkpoint)
 
 
 def read_pq_codes(spark: SparkSession, path: str) -> DataFrame:
@@ -899,7 +878,6 @@ def residual_codes_stream_parquet(
     checkpoint: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    trigger_available_now: bool = True,
 ):
     """Incremental TRUE-IVFADC index maintenance (round 7; the residual
     twin of :func:`pq_codes_stream_parquet`): each arriving vector
@@ -955,14 +933,7 @@ def residual_codes_stream_parquet(
         enc = pq_encode_residual(assigned, cbx, qcent, id_col, vec_col)
         enc.write.mode("overwrite").parquet(f"{index_path}/codes_inc/batch={batch_id}")
 
-    w = (
-        vec_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(vec_stream, merge, checkpoint)
 
 
 def read_residual_codes_inc(spark: SparkSession, path: str) -> DataFrame:
@@ -1071,7 +1042,6 @@ def knn_graph_stream_parquet(
     entries: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    trigger_available_now: bool = True,
     max_wave: int = 4096,
 ):
     """Incremental GRAPH-ANN ingest — the HNSW INSERT path (Malkov &
@@ -1123,14 +1093,7 @@ def knn_graph_stream_parquet(
         ).write.mode("overwrite").parquet(f"{path}/edges/batch={batch_id}")
         new.write.mode("overwrite").parquet(f"{path}/nodes/batch={batch_id}")
 
-    w = (
-        vec_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(vec_stream, merge, checkpoint)
 
 
 def read_knn_graph_inc(spark: SparkSession, base_index: str, path: str):
@@ -1161,7 +1124,6 @@ def knn_graph_stream_layered(
     vec_col: str = "embedding",
     sample_mod: int = 4,
     salt: str = "l1",
-    trigger_available_now: bool = True,
     max_wave: int = 4096,
 ):
     """Incremental ingest for the TWO-LAYER graph index (verdict r10
@@ -1222,14 +1184,7 @@ def knn_graph_stream_layered(
             f"{path}/l1/nodes/batch={batch_id}"
         )
 
-    w = (
-        vec_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(vec_stream, merge, checkpoint)
 
 
 def read_knn_graph_layered_inc(
@@ -1254,12 +1209,7 @@ def read_knn_graph_layered_inc(
     return out[0], out[1]
 
 
-def warc_records_stream_parquet(
-    warc_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_available_now: bool = True,
-):
+def warc_records_stream_parquet(warc_stream: DataFrame, path: str, checkpoint: str):
     """Streaming WARC ingest: arriving (media_id, payload) WARC files
     unpack to record-level metadata rows AS THEY LAND —
     sources/warc.warc_records is a stateless Arrow-batched pass, so
@@ -1271,10 +1221,7 @@ def warc_records_stream_parquet(
     so an interrupted crawl-ingest resumes from the commit log."""
     from hadoop_main_spark.sources.warc import warc_records
 
-    return write_stream_parquet(
-        warc_records(warc_stream), path, checkpoint,
-        trigger_available_now=trigger_available_now,
-    )
+    return write_stream_parquet(warc_records(warc_stream), path, checkpoint)
 
 
 def cdc_chunks_stream_parquet(
@@ -1283,7 +1230,6 @@ def cdc_chunks_stream_parquet(
     checkpoint: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    trigger_available_now: bool = True,
 ):
     """Streaming content-defined chunking: arriving documents cut into
     content-addressed chunks AS THEY LAND — dedup.cdc_chunks is a
@@ -1297,17 +1243,11 @@ def cdc_chunks_stream_parquet(
     from hadoop_main_spark.operators.dedup import cdc_chunks
 
     return write_stream_parquet(
-        cdc_chunks(doc_stream, id_col, text_col), path, checkpoint,
-        trigger_available_now=trigger_available_now,
+        cdc_chunks(doc_stream, id_col, text_col), path, checkpoint
     )
 
 
-def agg_view_stream_parquet(
-    event_stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_available_now: bool = True,
-):
+def agg_view_stream_parquet(event_stream: DataFrame, path: str, checkpoint: str):
     """Streaming incremental MATERIALIZED-VIEW maintenance — the
     stream form of the batch maintainer, running the IDENTICAL
     combine (:func:`~hadoop_main_spark.operators.aggregate.
@@ -1380,14 +1320,7 @@ def agg_view_stream_parquet(
             batch_id,
         )
 
-    w = (
-        event_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return start_foreach_batch(event_stream, merge, checkpoint)
 
 
 def read_agg_view(spark: SparkSession, path: str) -> DataFrame:

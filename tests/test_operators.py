@@ -1577,7 +1577,7 @@ def test_iterative_query_checkpoints_superseded(spark, sf_dir, tmp_path, monkeyp
     entries and no checkpoint RDD of an earlier run (review-r5). Covers a roundtrip write-then-read gate, a
     parity-wave stream, the MapFile gate, the k-core peel, the
     beam-search hop pools, and the lazily checkpointed vocabulary /
-    graph tables."""
+    graph / suffix-array LCP tables."""
     import tempfile
 
     from hadoop_main_spark.plans.registry import REGISTRY
@@ -1596,6 +1596,7 @@ def test_iterative_query_checkpoints_superseded(spark, sf_dir, tmp_path, monkeyp
         "knn_graph_search",
         "pmi_topk",
         "pagerank_top20",
+        "suffix_array_repeats",
     ):
         tmp0 = set(os.listdir(tmp_path))
         new_rdds, new_tmp = [], []
@@ -2344,15 +2345,26 @@ def test_exact_substr_removal_interval_merge(spark):
     assert out[3] == (15, 14, 1)
 
 
-def test_nndescent_descent_invariant_and_determinism(spark):
+def test_nndescent_descent_invariant_and_determinism(spark, monkeypatch):
     """NN-Descent (similarity.nndescent_knn_graph): each iteration's
     candidate set CONTAINS the previous neighbor list, so every node's
     top-k distance sum is non-increasing iteration over iteration (the
     descent invariant); two runs are bit-identical; self-edges never
-    appear; at most k neighbors per node."""
+    appear; at most k neighbors per node; ``iterations=n`` makes n
+    checkpoints (the seed list and one between iterations — the last
+    list feeds no further iteration)."""
     import numpy as np
 
     from hadoop_main_spark.operators import similarity as SIM
+
+    checkpoints = []
+    run_checkpoint = SIM.run_checkpoint
+
+    def counted(df, eager=False):
+        checkpoints.append(eager)
+        return run_checkpoint(df, eager=eager)
+
+    monkeypatch.setattr(SIM, "run_checkpoint", counted)
 
     rng = np.random.default_rng(23)
     centers = rng.uniform(-30, 30, (4, 16))
@@ -2366,7 +2378,9 @@ def test_nndescent_descent_invariant_and_determinism(spark):
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     def sums(iters):
+        checkpoints.clear()
         g = SIM.nndescent_knn_graph(corpus, k=5, iterations=iters).collect()
+        assert checkpoints == [True] * iters
         per = {}
         for r in g:
             assert r.id != r.nbr_id

@@ -158,23 +158,64 @@ def test_stream_parquet_sink_checkpointed(spark, sf_dir, tmp_path):
 def test_stream_session_sizes_child_not_parent(spark, tmp_path):
     """stream_session's child gets the volume-sized shuffle partition
     count and the parent's runtime confs (a non-default timezone
-    here); the parent's partition count never changes."""
+    here); the parent's partition count never changes. A replay feeds
+    one file per micro-batch, so a dir of two files is sized by its
+    per-file bytes, not its total."""
     from hadoop_main_spark.session import default_parallelism
 
+    size = 2 * W.STREAM_TARGET_BYTES + 1
     src = tmp_path / "src"
     src.mkdir()
-    (src / "part-0.parquet").write_bytes(b"x" * (2 * W.STREAM_TARGET_BYTES + 1))
+    (src / "part-0.parquet").write_bytes(b"x" * size)
     (src / "_SUCCESS").write_bytes(b"")
     key, tz_key = "spark.sql.shuffle.partitions", "spark.sql.session.timeZone"
     parts, tz = spark.conf.get(key), spark.conf.get(tz_key)
     spark.conf.set(tz_key, "America/Chicago")
     try:
-        child = W.stream_session(spark, str(src), n_batches=1)
+        child = W.stream_session(spark, str(src))
     finally:
         spark.conf.set(tz_key, tz)
     assert child.conf.get(key) == str(min(default_parallelism(), 3))
     assert child.conf.get(tz_key) == "America/Chicago"
     assert spark.conf.get(key) == parts
+
+    two = tmp_path / "two"
+    two.mkdir()
+    for k in range(2):
+        (two / f"w{k}.parquet").write_bytes(b"x" * size)
+    child = W.stream_session(spark, str(two))
+    assert child.conf.get(key) == str(min(default_parallelism(), 3))
+    assert spark.conf.get(key) == parts
+
+
+def test_staged_waves_replay_one_per_batch(spark, tmp_path):
+    """stage_waves writes one file per wave with strictly increasing
+    mtimes; replay_stream + start_foreach_batch drain them as one
+    micro-batch per wave, in wave order."""
+    import os
+
+    waves = [spark.range(10 * k, 10 * k + 3 + k) for k in range(3)]
+    src = W.stage_waves(waves, str(tmp_path / "src"))
+    files = sorted(os.listdir(src))
+    assert files == ["w0.parquet", "w1.parquet", "w2.parquet"]
+    mtimes = [os.stat(os.path.join(src, f)).st_mtime for f in files]
+    assert mtimes[0] < mtimes[1] < mtimes[2]
+    assert sorted(os.listdir(tmp_path)) == ["src"]  # sibling dirs removed
+
+    out = str(tmp_path / "out")
+
+    def sink(batch, batch_id):
+        batch.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
+
+    q = W.start_foreach_batch(
+        W.replay_stream(spark, src, waves[0].schema), sink, str(tmp_path / "ckpt")
+    )
+    assert q.awaitTermination(120)
+    got = spark.read.parquet(out)
+    assert sorted(r.batch for r in got.select("batch").distinct().collect()) == [0, 1, 2]
+    for k, wave in enumerate(waves):
+        ids = {r.id for r in got.filter(F.col("batch") == k).collect()}
+        assert ids == {r.id for r in wave.collect()}, k
 
 
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
@@ -397,11 +438,7 @@ def test_hll_sink_merges_across_micro_batches(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events").select("user_id")
     events.repartition(4).write.mode("overwrite").parquet(src)
 
-    stream = (
-        spark.readStream.schema("user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = W.replay_stream(spark, src, "user_id long")
     out, ckpt = str(tmp_path / "hll4"), str(tmp_path / "hll4ckpt")
     q = W.hll_sketch_stream_parquet(stream, "user_id", out, ckpt)
     q.awaitTermination(120)
@@ -613,11 +650,7 @@ def test_span_counts_stream_equals_batch(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     docs.repartition(4).write.mode("overwrite").parquet(src)
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = W.replay_stream(spark, src, "doc_id long, text string")
     out, ckpt = str(tmp_path / "spans"), str(tmp_path / "spansckpt")
     q = W.span_counts_stream_parquet(stream, "doc_id", "text", out, ckpt, window=10)
     assert q.awaitTermination(300), "stream did not finish in time"
@@ -1136,11 +1169,7 @@ def test_pq_codes_stream_equals_batch_encode(spark, tmp_path):
     cb, _ = SIM.pq_codebook(vecs)
     src = str(tmp_path / "vsrc")
     vecs.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = W.replay_stream(spark, src, "vec_id long, embedding array<double>")
     codes_p, ck = str(tmp_path / "codes"), str(tmp_path / "ck")
     q = W.pq_codes_stream_parquet(stream, cb, codes_p, ck)
     assert q.awaitTermination(300)
@@ -1166,11 +1195,7 @@ def test_pq_codes_stream_equals_batch_encode(spark, tmp_path):
     import os
 
     n_dirs = len([d for d in os.listdir(codes_p) if d.startswith("batch=")])
-    stream2 = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream2 = W.replay_stream(spark, src, "vec_id long, embedding array<double>")
     q2 = W.pq_codes_stream_parquet(stream2, cb, codes_p, ck)
     assert q2.awaitTermination(300)
     assert len([d for d in os.listdir(codes_p) if d.startswith("batch=")]) == n_dirs
@@ -1209,11 +1234,7 @@ def test_residual_codes_stream_equals_batch_encode(spark, tmp_path):
     newv = mkvecs(200, 400).drop("label")  # arrivals carry no cell
     src = str(tmp_path / "vsrc")
     newv.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = W.replay_stream(spark, src, "vec_id long, embedding array<double>")
     ck = str(tmp_path / "ck")
     q = W.residual_codes_stream_parquet(stream, idx, ck)
     assert q.awaitTermination(300)
@@ -1249,11 +1270,7 @@ def test_residual_codes_stream_equals_batch_encode(spark, tmp_path):
     # replay: same stream + checkpoint processes nothing new
     inc_dir = f"{idx}/codes_inc"
     n_dirs = len([d for d in os.listdir(inc_dir) if d.startswith("batch=")])
-    stream2 = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream2 = W.replay_stream(spark, src, "vec_id long, embedding array<double>")
     q2 = W.residual_codes_stream_parquet(stream2, idx, ck)
     assert q2.awaitTermination(300)
     assert len([d for d in os.listdir(inc_dir) if d.startswith("batch=")]) == n_dirs
@@ -1323,10 +1340,6 @@ def test_gap_sessions_state_carry_across_batches(spark, tmp_path):
     micro-batches reconstructs as ONE session; a gap inside a batch
     splits; the open-session snapshot is superseded by its closed
     emission (same (key, session_start), greater-or-equal n)."""
-    import glob
-    import os
-    import shutil
-
     from pyspark.sql import Window
     from hadoop_main_spark.streaming.stateful import gap_sessions
 
@@ -1347,32 +1360,18 @@ def test_gap_sessions_state_carry_across_batches(spark, tmp_path):
         [ev(3, 1, 40 * MIN)],
         [ev(4, 1, 70 * MIN), ev(11, 2, 200 * MIN)],
     ]
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    for k, rows in enumerate(batches):
-        d = str(tmp_path / f"b{k}")
-        spark.createDataFrame(
-            rows, "event_id long, user_id long, ts timestamp"
-        ).coalesce(1).write.parquet(d)
-        (pf,) = glob.glob(f"{d}/part-*.parquet")
-        dst = f"{src}/q{k}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + k * 60, 1_700_000_000 + k * 60))
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
+    schema = "event_id long, user_id long, ts timestamp"
+    waves = [spark.createDataFrame(rows, schema) for rows in batches]
+    stream = W.replay_stream(spark, W.stage_waves(waves, str(tmp_path / "src")), schema)
     out = str(tmp_path / "out")
 
     def sink(b, i):
         b.write.mode("overwrite").parquet(f"{out}/batch={i}")
 
-    q = (
-        gap_sessions(stream, "user_id", "ts", "event_id",
-                     gap_us=30 * MIN)
-        .writeStream.foreachBatch(sink).outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True).start()
+    q = W.start_foreach_batch(
+        gap_sessions(stream, "user_id", "ts", "event_id", gap_us=30 * MIN),
+        sink,
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     emitted = spark.read.parquet(out)
@@ -1402,9 +1401,7 @@ def test_knn_graph_stream_insert_equals_sequential_batch(spark, tmp_path):
     ingested vectors are REACHABLE (a duplicate of an ingested vector
     finds it at rank 1 through the reverse links); a checkpoint
     re-run reprocesses nothing."""
-    import glob
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -1432,23 +1429,11 @@ def test_knn_graph_stream_insert_equals_sequential_batch(spark, tmp_path):
     idx = str(tmp_path / "gidx")
     SIM.build_knn_graph_index(base, idx, k=5, iterations=2)
 
-    src = str(tmp_path / "vsrc")
-    os.makedirs(src)
     batches = [mkvecs(1000, 20), mkvecs(1020, 20), mkvecs(1040, 20)]
-    for bi, bdf in enumerate(batches):
-        part = str(tmp_path / f"part{bi}")
-        bdf.coalesce(1).write.parquet(part)
-        (pf,) = glob.glob(f"{part}/part-*.parquet")
-        dst = f"{src}/b{bi}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + bi * 60,) * 2)
+    src = W.stage_waves(batches, str(tmp_path / "vsrc"))
 
     inc, ck = str(tmp_path / "inc"), str(tmp_path / "gck")
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = W.replay_stream(spark, src, "vec_id long, embedding array<double>")
     q = W.knn_graph_stream_parquet(
         stream, idx, inc, ck, k=5, beam=12, hops=3, entries=4
     )
@@ -1494,11 +1479,7 @@ def test_knn_graph_stream_insert_equals_sequential_batch(spark, tmp_path):
 
     # checkpoint re-run: nothing reprocessed
     n_dirs = len(os.listdir(f"{inc}/edges"))
-    stream2 = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream2 = W.replay_stream(spark, src, "vec_id long, embedding array<double>")
     q2 = W.knn_graph_stream_parquet(
         stream2, idx, inc, ck, k=5, beam=12, hops=3, entries=4
     )
@@ -1575,10 +1556,6 @@ def test_knn_graph_stream_layered_maintains_both_layers(spark, tmp_path):
     accumulated layer-1 node set equals the membership rule applied
     to the full ingested corpus (stream and fresh build select the
     same layer-1 nodes by construction)."""
-    import glob
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     from hadoop_main_spark.functions.hashing import hash64
@@ -1606,23 +1583,11 @@ def test_knn_graph_stream_layered_maintains_both_layers(spark, tmp_path):
     SIM.build_knn_graph_index(base, l0, k=5, iterations=2)
     SIM.build_knn_graph_index(base.filter(member), l1, k=4, iterations=2)
 
-    src = str(tmp_path / "vsrc")
-    os.makedirs(src)
     batches = [mkvecs(1000, 20), mkvecs(1020, 20)]
-    for bi, bdf in enumerate(batches):
-        part = str(tmp_path / f"part{bi}")
-        bdf.coalesce(1).write.parquet(part)
-        (pf,) = glob.glob(f"{part}/part-*.parquet")
-        dst = f"{src}/b{bi}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + bi * 60,) * 2)
+    src = W.stage_waves(batches, str(tmp_path / "vsrc"))
 
     inc, ck = str(tmp_path / "inc"), str(tmp_path / "lck")
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = W.replay_stream(spark, src, "vec_id long, embedding array<double>")
     q = W.knn_graph_stream_layered(
         stream, l0, l1, inc, ck, k0=5, k1=4, beam=12, hops=3, entries=4
     )

@@ -720,13 +720,11 @@ def test_gap_sessions_model(spark, tmp_path_factory, evs):
     """Stateful sessionization reconstructed from a 3-batch time-split
     replay must equal the single-pass batch model (30-min gap)."""
     import datetime
-    import glob
-    import os
-    import shutil
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from hadoop_main_spark.streaming import windows as W
     from hadoop_main_spark.streaming.stateful import gap_sessions
 
     US = 1_000_000
@@ -767,35 +765,18 @@ def test_gap_sessions_model(spark, tmp_path_factory, evs):
          if cut1 < (r[2] - base_dt).total_seconds() / 60 <= cut2],
         [r for r in rows if (r[2] - base_dt).total_seconds() / 60 > cut2],
     ]
-    src = str(tmp / "src")
-    os.makedirs(src)
-    k_out = 0
-    for rows_k in batches:
-        if not rows_k:
-            continue
-        d = str(tmp / f"b{k_out}")
-        spark.createDataFrame(
-            rows_k, "event_id long, user_id long, ts timestamp"
-        ).coalesce(1).write.parquet(d)
-        (pf,) = glob.glob(f"{d}/part-*.parquet")
-        dst = f"{src}/q{k_out}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + k_out * 60,) * 2)
-        k_out += 1
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
+    schema = "event_id long, user_id long, ts timestamp"
+    waves = [spark.createDataFrame(rows_k, schema) for rows_k in batches if rows_k]
+    stream = W.replay_stream(spark, W.stage_waves(waves, str(tmp / "src")), schema)
     out = str(tmp / "out")
 
     def sink(b, i):
         b.write.mode("overwrite").parquet(f"{out}/batch={i}")
 
-    q = (
-        gap_sessions(stream, "user_id", "ts", "event_id", gap_us=GAP)
-        .writeStream.foreachBatch(sink).outputMode("update")
-        .option("checkpointLocation", str(tmp / "ckpt"))
-        .trigger(availableNow=True).start()
+    q = W.start_foreach_batch(
+        gap_sessions(stream, "user_id", "ts", "event_id", gap_us=GAP),
+        sink,
+        str(tmp / "ckpt"),
     )
     q.awaitTermination(180)
     emitted = spark.read.parquet(out)

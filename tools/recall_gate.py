@@ -445,8 +445,6 @@ def measure_layered_stream(spark, sf_dir: str) -> dict[str, float]:
     the same search over a FRESH full two-layer build. Bar: streamed
     recall within 0.02 of fresh-build (asserted hard here, pinned to
     ledger tolerance in RECALL.md)."""
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -459,6 +457,8 @@ def measure_layered_stream(spark, sf_dir: str) -> dict[str, float]:
     from hadoop_main_spark.streaming.windows import (
         knn_graph_stream_layered,
         read_knn_graph_layered_inc,
+        replay_stream,
+        stage_waves,
     )
     from hadoop_main_spark.tables import load_table
 
@@ -502,25 +502,15 @@ def measure_layered_stream(spark, sf_dir: str) -> dict[str, float]:
         base.filter(member), f"{root}/l1", k=8, iterations=2
     )
     # the remaining 40% as five mtime-ordered single-file waves
-    rest = e.filter(F.col("vec_id") >= cut)
-    src = f"{root}/src"
-    os.makedirs(src)
     span = (int(ids[-1]) + 1 - cut + 4) // 5
-    for w in range(5):
-        part = f"{root}/part{w}"
-        rest.filter(
+    waves = [
+        e.filter(
             (F.col("vec_id") >= cut + w * span)
             & (F.col("vec_id") < cut + (w + 1) * span)
-        ).coalesce(1).write.parquet(part)
-        (pf,) = glob.glob(f"{part}/part-*.parquet")
-        dst = f"{src}/w{w}.parquet"
-        shutil.move(pf, dst)
-        os.utime(dst, (1_700_000_000 + w * 60,) * 2)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+        )
+        for w in range(5)
+    ]
+    stream = replay_stream(spark, stage_waves(waves, f"{root}/src"), e.schema)
     q = knn_graph_stream_layered(
         stream, f"{root}/l0", f"{root}/l1", f"{root}/inc", f"{root}/ckpt",
         k0=K, k1=8, beam=20, hops=3, entries=4,
