@@ -161,7 +161,9 @@ def build_suffix_index(
     build_knn_graph_index): the O(log maxlen)-round build is paid at
     ingest and every downstream repeat/search query is bounded joins
     over the persisted tables."""
-    ranks = suffix_ranks(docs, id_col, text_col, max_tokens).localCheckpoint()
+    # a projection of suffix_ranks' last rank round, which is already an
+    # eager run checkpoint: both writes read that round
+    ranks = suffix_ranks(docs, id_col, text_col, max_tokens)
     ranks.write.mode("overwrite").parquet(f"{path}/ranks")
     (
         ranks.groupBy("rank")
@@ -177,9 +179,6 @@ def build_suffix_index(
         .write.mode("overwrite")
         .parquet(f"{path}/classes")
     )
-    from hadoop_main_spark.operators.checkpoints import ckpt_rdd_id, unpersist_rdd
-
-    unpersist_rdd(docs, ckpt_rdd_id(ranks))
 
 
 def suffix_repeats_indexed(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hadoop_main_spark.operators.checkpoints import run_checkpoint, run_tmpdir
+from hadoop_main_spark.operators.checkpoints import run_tmpdir
 from hadoop_main_spark.plans.core_queries import _one, _price, _rate
 from hadoop_main_spark.plans.registry import query, t
 
@@ -1989,10 +1989,9 @@ def kcore_parts(spark: SparkSession, sf: str) -> DataFrame:
         .select("p.a", "p.b")
         .distinct()
     )
-    # lazy-checkpoint the edge list (the triangle_count discipline) so
-    # neither the stats actions nor the peel rounds replay the basket
-    # explosion
-    edges = run_checkpoint(edges)
+    # no checkpoint here: kcore lazily checkpoints its input edge list
+    # itself, so neither its stats pass nor its peel rounds replay the
+    # basket explosion, and it releases that copy after round 0
     # k = (5 * mean_degree) div 8 derives INSIDE kcore off round 0's
     # degree table — no separate edge/node counting pass
     core = kcore(edges, mean_frac=(5, 8))

@@ -1584,9 +1584,13 @@ def test_iterative_query_checkpoints_superseded(spark, sf_dir, tmp_path, monkeyp
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
 
-    def persisted_ids():
+    def persisted():
         m = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
+        return {int(k): m.get(k) for k in m.keySet().toArray()}
+
+    def still_stored(handle):
+        level = handle.getStorageLevel()
+        return level.useMemory() or level.useDisk()
 
     for name in (
         "har_roundtrip_agg",
@@ -1601,13 +1605,19 @@ def test_iterative_query_checkpoints_superseded(spark, sf_dir, tmp_path, monkeyp
         tmp0 = set(os.listdir(tmp_path))
         new_rdds, new_tmp = [], []
         for _ in range(3):
-            before = persisted_ids()
+            before = persisted().keys()
             REGISTRY[name].build(spark, sf_dir).count()
-            new_rdds.append(persisted_ids() - before)
+            # hold a handle to every RDD the run persisted: the JVM keeps
+            # persisted RDDs weakly, so without one a GC could drop a
+            # leaked checkpoint before the check below
+            new_rdds.append(
+                {rid: h for rid, h in persisted().items() if rid not in before}
+            )
             new_tmp.append(len(set(os.listdir(tmp_path)) - tmp0))
-        # by id, not by count: the JVM keeps persisted RDDs weakly, so
-        # a GC may drop unreferenced ones at any time
-        assert not (new_rdds[0] | new_rdds[1]) & persisted_ids(), (name, new_rdds)
+        leaked = [
+            rid for run in new_rdds[:2] for rid, h in run.items() if still_stored(h)
+        ]
+        assert not leaked, (name, leaked, [sorted(run) for run in new_rdds])
         assert max(new_tmp) == new_tmp[0], (name, new_tmp)
 
 

@@ -1,6 +1,7 @@
 """Unit tests for the round-7 self-enforcement tooling: the plan-lint
-tree parser / rules (tools/plan_lint.py) and the bench best-known
-ledger (bench.py). Pure logic — no SparkSession needed."""
+tree parser / rules (tools/plan_lint.py), the bench best-known
+ledger (bench.py) and the sweep ledger (tools/sweep_all.py). Pure
+logic, except the sweep ledger test, which runs one tiny query."""
 
 import json
 import os
@@ -195,3 +196,11 @@ def test_sweep_all_takes_out_path_only_from_flag():
     assert SW.parse_args([]).queries == list(SW.REGISTRY)
     with pytest.raises(SystemExit):
         SW.parse_args(["ledger.json", names[0]])  # not a query name
+
+
+def test_sweep_all_ledger_reports_jit_per_query(spark, sf_dir):
+    import sweep_all as SW
+
+    ledger = SW.sweep(spark, ["pricing_summary"], sf_dir, runs=1)
+    assert list(ledger["times"]) == list(ledger["jit_s"]) == ["pricing_summary"]
+    assert ledger["jit_s"]["pricing_summary"] >= 0 and not ledger["errors"]

@@ -1,5 +1,6 @@
 """Session-level fixed costs: the compiled-class cache, the Python
-worker daemon and the workers' import path."""
+worker daemon, the workers' import path and the driver JVM's JIT
+thresholds."""
 
 from __future__ import annotations
 
@@ -12,7 +13,11 @@ import zipimport
 import pytest
 
 from hadoop_main_spark import pydaemon
-from hadoop_main_spark.session import CODEGEN_CACHE_ENTRIES, PACKAGE_ROOT
+from hadoop_main_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    DRIVER_JIT_OPTIONS,
+    PACKAGE_ROOT,
+)
 
 
 def _write_zip(path, modules: dict[str, str]) -> None:
@@ -73,6 +78,15 @@ def test_session_carries_fixed_cost_confs(spark):
     )
     assert sc.getConf().get("spark.python.daemon.module") == "hadoop_main_spark.pydaemon"
     assert sc.environment["PYTHONPATH"] == PACKAGE_ROOT
+    # the flags the running driver JVM was started with
+    mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    jvm_args = set(mx.getInputArguments())
+    for flag in (
+        "-XX:Tier4InvocationThreshold=25000",
+        "-XX:Tier4MinInvocationThreshold=3000",
+        "-XX:Tier4CompileThreshold=75000",
+    ):
+        assert flag in DRIVER_JIT_OPTIONS.split() and flag in jvm_args
 
     def probe(_):
         import zipimport

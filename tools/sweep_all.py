@@ -3,8 +3,9 @@
 Times EVERY registry query at $SPARK_GRAFT_SF_DIR (default sf0.1),
 build()+action (the r12 methodology — eager-checkpoint iterative
 queries do real compute in build()), min of N runs after one untimed
-warmup, and writes a ranked JSON ledger to the path given by --out
-(default /tmp/sweep_all.json). Use to find the expensive registry
+warmup, and writes a ranked JSON ledger (times, plus each query's
+driver JIT seconds) to the path given by --out (default
+/tmp/sweep_all.json). Use to find the expensive registry
 tail beyond the bench headline set.
 
 Usage: python tools/sweep_all.py [--out out.json] [--runs N] [query ...]
@@ -37,38 +38,53 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     return args
 
 
-def main() -> None:
-    args = parse_args()
-    runs, out_path, names = args.runs, args.out, args.queries
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("sweep-all")
+def compile_ms(spark) -> int:
+    """Milliseconds the driver JVM's JIT compilers have spent so far."""
+    mx = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return int(mx.getTotalCompilationTime())
+
+
+def sweep(spark, names: list[str], sf_dir: str, runs: int) -> dict:
+    """The ledger: per query the min of ``runs`` timed runs after one
+    untimed warmup, and ``jit_s``, the driver JVM's JIT compile time
+    over those timed runs. The compiler runs on its own threads, so the
+    time figure does not show it, yet on short local runs it can be a
+    third of the process CPU."""
     times: dict[str, float] = {}
+    jit: dict[str, float] = {}
     errs: dict[str, str] = {}
     for i, name in enumerate(names):
         spark.sparkContext.setJobDescription(f"sweep: {name}")
         try:
             run_once(spark, name, sf_dir)  # untimed warmup
+            c0 = compile_ms(spark)
             t = min(run_once(spark, name, sf_dir) for _ in range(runs))
             times[name] = round(t, 3)
+            jit[name] = round((compile_ms(spark) - c0) / 1000, 3)
         except Exception as e:  # noqa: BLE001 — a sweep must finish
             errs[name] = f"{type(e).__name__}: {e}"[:300]
         print(f"[{i + 1}/{len(names)}] {name}: {times.get(name, 'ERR')}", flush=True)
     ranked = dict(sorted(times.items(), key=lambda kv: -kv[1]))
-    with open(out_path, "w") as f:
-        json.dump(
-            {
-                "sf_dir": sf_dir,
-                "timing": "build+action",
-                "runs": runs,
-                "total": round(sum(times.values()), 3),
-                "times": ranked,
-                "errors": errs,
-            },
-            f,
-            indent=1,
-        )
+    return {
+        "sf_dir": sf_dir,
+        "timing": "build+action",
+        "runs": runs,
+        "total": round(sum(times.values()), 3),
+        "times": ranked,
+        "jit_s": {name: jit[name] for name in ranked},
+        "errors": errs,
+    }
+
+
+def main() -> None:
+    args = parse_args()
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark("sweep-all")
+    ledger = sweep(spark, args.queries, sf_dir, args.runs)
+    with open(args.out, "w") as f:
+        json.dump(ledger, f, indent=1)
         f.write("\n")
-    print("wrote", out_path, "total", round(sum(times.values()), 1), "s")
+    print("wrote", args.out, "total", round(ledger["total"], 1), "s")
     spark.stop()
 
 
