@@ -20,13 +20,13 @@ layouts) driving :func:`frame_sample` and a REAL MJPEG-AVI path
 (:func:`avi_frame_sample`); ``'stub'`` is a deterministic fake for
 arbitrary blobs; compressed codec formats whose libraries are
 absent here (opus/mp3/webp, H.26x/VPx) raise a clearly-marked
-NotImplementedError — plug one into the same mapInPandas
-signature.
+NotImplementedError — plug one into the same map_payloads
+walk.
 
 Scale notes: payloads dominate row size — keep them in their own
 column (Parquet stores them contiguously), never in the shuffle key,
 and resize/feature-extract *before* any wide operation so shuffles
-move features (KBs) not media (MBs). `mapInPandas` keeps the decode
+move features (KBs) not media (MBs). `map_payloads` keeps the decode
 batch-parallel with Arrow transfer.
 """
 
@@ -39,9 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -59,14 +57,7 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("digest", StringType()),
-        StructField("features", ArrayType(DoubleType())),
-    ]
-)
+FEATURE_SCHEMA = "media_id long, n_bytes long, digest string, features array<double>"
 
 
 def media_table_from_documents(docs: DataFrame) -> DataFrame:
@@ -81,6 +72,71 @@ def media_table_from_documents(docs: DataFrame) -> DataFrame:
         (F.col("n_chars") % 640 + 16).alias("meta_width"),
         (F.col("n_chars") % 480 + 16).alias("meta_height"),
     )
+
+
+# --- the payload boundary: one Arrow kernel each way -------------------------
+# Every (media_id, payload) kernel crosses the JVM<->Python boundary
+# through these two: encode_media builds payloads from an id spine,
+# map_payloads walks payloads back into typed rows. Ids are read and
+# written through Arrow, never through a pandas column: one NULL makes
+# a pandas int64 column float64, and every id past 2^53 then rounds.
+
+
+def encode_media(spine: DataFrame, encode) -> DataFrame:
+    """(media_id long, payload binary), one row per ``spine`` row:
+    ``media_id`` is the spine's first column, ``payload`` is
+    ``encode(*row)`` over the row's Python values. Only the spine
+    crosses any exchange before this; payloads are born here."""
+
+    def run(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            rows = zip(*(c.to_pylist() for c in b.columns))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(0).cast(pa.int64()),
+                    pa.array([encode(*r) for r in rows], pa.binary()),
+                ],
+                names=["media_id", "payload"],
+            )
+
+    return spine.mapInArrow(run, "media_id long, payload binary")
+
+
+def map_payloads(media: DataFrame, walk, bad: list, schema: str) -> DataFrame:
+    """One Arrow-batched pass over ``media``'s (media_id, payload):
+    ``walk(payload)`` returns that payload's rows, tuples of the
+    ``schema`` columns after media_id. A NULL payload walks as b"";
+    a ValueError yields ``bad`` instead (the kernel's bad-record rows,
+    ``[]`` to drop the record), so one corrupt file never kills a
+    100 TB pass; any other exception fails the task. The output batch
+    is built against the declared schema, so ids come back exact."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out = to_arrow_schema(StructType.fromDDL(schema))
+    fields = list(out)[1:]
+
+    def run(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            ids, rows = [], []
+            for mid, p in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
+                try:
+                    got = list(walk(b"" if p is None else p))
+                except ValueError:
+                    got = bad
+                ids += [mid] * len(got)
+                rows += got
+            cols = list(zip(*rows)) if rows else [[]] * len(fields)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids, pa.int64())]
+                + [pa.array(c, f.type) for c, f in zip(cols, fields)],
+                schema=out,
+            )
+
+    return media.select("media_id", "payload").mapInArrow(run, schema)
 
 
 # --- real decoder for the uncompressed PPM (P6) image format -----------------
@@ -1229,10 +1285,10 @@ def _stub_features(payload: bytes, dim: int) -> list[float]:
 
 
 def extract_features(
-    media: DataFrame, decoder: str = "stub", dim: int = 8, batch_check: bool = False
+    media: DataFrame, decoder: str = "stub", dim: int = 8
 ) -> DataFrame:
     """Decode + feature-extract each payload via Arrow-batched
-    mapInPandas. ``decoder='stub'`` produces deterministic fake
+    map_payloads. ``decoder='stub'`` produces deterministic fake
     features; ``decoder='ppm'`` REALLY decodes binary P6 payloads
     (pure numpy, see _ppm_decode) and emits per-band gray means; any
     other name requires decode libraries absent here.
@@ -1262,23 +1318,14 @@ def extract_features(
             "are the real no-library paths, 'stub' the fake"
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if batch_check and len(b) == 0:
-                continue
-            # NULL payload = bad record: normalize to b'' (zeros
-            # policy) instead of a TypeError killing the task
-            payloads = b["payload"].map(lambda p: bytes(p) if p is not None else b"")
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "digest": payloads.map(lambda p: hashlib.md5(p).hexdigest()),
-                    "features": payloads.map(lambda p: feat(p, dim)),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, FEATURE_SCHEMA)
+    # every feature fn takes the zeros bad-record path itself, so a
+    # malformed (or NULL, walked as b'') payload keeps its row
+    return map_payloads(
+        media,
+        lambda p: [(len(p), hashlib.md5(p).hexdigest(), feat(p, dim))],
+        [],
+        FEATURE_SCHEMA,
+    )
 
 
 def resize(media: DataFrame, width: int, height: int, decoder: str = "stub") -> DataFrame:
@@ -1482,7 +1529,7 @@ def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
     container (pure header + raw planes — no codec libraries needed),
     keep every ``every_n``-th frame, and emit per-frame summaries
     (plane means + pixel digest) — the 1→N decode-and-sample shape
-    with the decode Arrow-batched in mapInPandas. Replaces
+    with the decode Arrow-batched in map_payloads. Replaces
     :func:`frame_sample_stub` as the production path for uncompressed
     containers; compressed codecs still need absent libraries.
 
@@ -1492,49 +1539,26 @@ def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
     bad records: they emit zero rows instead of killing the task."""
     import hashlib as _hl
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                if mid is None or pd.isna(mid):
-                    continue  # bad record: no id to attribute frames to
-                try:
-                    w, h, _fps, _cs, frames = _y4m_decode(
-                        bytes(payload) if payload is not None else b""
-                    )
-                except ValueError:
-                    continue  # bad record: skip, never fail the task
-                for idx in range(0, len(frames), every_n):
-                    y, cb, cr = frames[idx]
-                    dig = _hl.md5(y.tobytes())
-                    if cb is not None:
-                        dig.update(cb.tobytes())
-                        dig.update(cr.tobytes())
-                    rows.append(
-                        (
-                            int(mid), idx, w, h,
-                            float(y.mean()),
-                            float(cb.mean()) if cb is not None else None,
-                            float(cr.mean()) if cr is not None else None,
-                            dig.hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "y_mean", "cb_mean", "cr_mean", "frame_digest",
-                ],
+    def walk(p: bytes):
+        w, h, _fps, _cs, frames = _y4m_decode(p)
+        for idx in range(0, len(frames), every_n):
+            y, cb, cr = frames[idx]
+            dig = _hl.md5(y.tobytes())
+            if cb is not None:
+                dig.update(cb.tobytes())
+                dig.update(cr.tobytes())
+            yield (
+                idx, w, h,
+                float(y.mean()),
+                float(cb.mean()) if cb is not None else None,
+                float(cr.mean()) if cr is not None else None,
+                dig.hexdigest(),
             )
 
-    # the null-id filter stays JVM-side ON PURPOSE: one NULL in an
-    # Arrow batch coerces the pandas int64 id column to float64,
-    # silently rounding valid ids past 2^53 (review-r6); the in-loop
-    # pd.isna guard is defense-in-depth only
-    return (
-        media.select("media_id", "payload")
-        .filter(F.col("media_id").isNotNull())
-        .mapInPandas(run, VIDEO_FRAME_SCHEMA)
+    # a record with no id has no frames to attribute: filter it
+    # JVM-side, before the payload ever reaches Python
+    return map_payloads(
+        media.filter(F.col("media_id").isNotNull()), walk, [], VIDEO_FRAME_SCHEMA
     )
 
 
@@ -1692,49 +1716,21 @@ def avi_frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
     (full validation) on the quarantine pass."""
     import hashlib as _hl
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                if mid is None or pd.isna(mid):
-                    continue  # bad record: no id to attribute frames to
-                try:
-                    # chunk walk only — then entropy-decode JUST the
-                    # sampled frames (decoding all N wastes ~every_n x
-                    # the T.81 CPU)
-                    w, h, _fps, payloads = _avi_mjpeg_chunks(
-                        bytes(payload) if payload is not None else b""
-                    )
-                    frame_rows = []
-                    for idx in range(0, len(payloads), every_n):
-                        a = _jpeg_decode(payloads[idx])
-                        frame_rows.append(
-                            (
-                                int(mid), idx, w, h, int(a.shape[2]),
-                                float(a.mean()),
-                                _hl.md5(a.tobytes()).hexdigest(),
-                            )
-                        )
-                except ValueError:
-                    # bad container or corrupt SAMPLED frame: skip the
-                    # whole file (non-sampled frames are never decoded
-                    # — see the docstring contract)
-                    continue
-                rows.extend(frame_rows)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height", "ch",
-                    "px_mean", "frame_digest",
-                ],
+    def walk(p: bytes):
+        # chunk walk only — then entropy-decode JUST the sampled frames
+        # (decoding all N wastes ~every_n x the T.81 CPU); a bad
+        # container or corrupt SAMPLED frame skips the whole file
+        w, h, _fps, payloads = _avi_mjpeg_chunks(p)
+        for idx in range(0, len(payloads), every_n):
+            a = _jpeg_decode(payloads[idx])
+            yield (
+                idx, w, h, int(a.shape[2]), float(a.mean()),
+                _hl.md5(a.tobytes()).hexdigest(),
             )
 
-    # JVM-side null-id filter: same float64-coercion rationale as
-    # frame_sample (review-r6)
-    return (
-        media.select("media_id", "payload")
-        .filter(F.col("media_id").isNotNull())
-        .mapInPandas(run, AVI_FRAME_SCHEMA)
+    # JVM-side null-id filter: a record with no id has no frames
+    return map_payloads(
+        media.filter(F.col("media_id").isNotNull()), walk, [], AVI_FRAME_SCHEMA
     )
 
 
@@ -2484,46 +2480,23 @@ def gif_frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
     not animation length."""
     import hashlib as _hl
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                if mid is None or pd.isna(mid):
-                    continue
-                try:
-                    frames, _delays = _gif_decode(
-                        bytes(payload) if payload is not None else b"",
-                        frame_stride=every_n,
-                    )
-                except ValueError:
-                    continue  # bad record: skip, never fail the task
-                for i, a in enumerate(frames):
-                    idx = i * every_n
-                    rows.append(
-                        (
-                            int(mid), idx, a.shape[1], a.shape[0],
-                            float(a[:, :, 0].mean()),
-                            float(a[:, :, 1].mean()),
-                            float(a[:, :, 2].mean()),
-                            _hl.md5(a.tobytes()).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "r_mean", "g_mean", "b_mean", "frame_digest",
-                ],
+    def walk(p: bytes):
+        frames, _delays = _gif_decode(p, frame_stride=every_n)
+        for i, a in enumerate(frames):
+            yield (
+                i * every_n, a.shape[1], a.shape[0],
+                float(a[:, :, 0].mean()),
+                float(a[:, :, 1].mean()),
+                float(a[:, :, 2].mean()),
+                _hl.md5(a.tobytes()).hexdigest(),
             )
 
-    return (
-        media.select("media_id", "payload")
-        .filter(F.col("media_id").isNotNull())
-        .mapInPandas(
-            run,
-            "media_id long, frame_idx long, width long, height long, "
-            "r_mean double, g_mean double, b_mean double, frame_digest string",
-        )
+    return map_payloads(
+        media.filter(F.col("media_id").isNotNull()),
+        walk,
+        [],
+        "media_id long, frame_idx long, width long, height long, "
+        "r_mean double, g_mean double, b_mean double, frame_digest string",
     )
 
 
@@ -2632,25 +2605,11 @@ def image_dhash(
             "environment; 'ppm'/'png'/'jpeg' are the real no-library paths"
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = b["payload"].map(lambda p: bytes(p) if p is not None else b"")
-
-            def _h(p: bytes) -> int:
-                try:
-                    return _image_dhash_arr(dec(p), grid_w, grid_h)
-                except ValueError:
-                    return -1
-
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "dhash": payloads.map(_h).astype("int64"),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, "media_id long, dhash long"
+    return map_payloads(
+        media,
+        lambda p: [(_image_dhash_arr(dec(p), grid_w, grid_h),)],
+        [(-1,)],
+        "media_id long, dhash long",
     )
 
 
@@ -2674,36 +2633,20 @@ def video_luma_fingerprint(media: DataFrame, bits: int = 56) -> DataFrame:
     if bits > 62:
         raise ValueError(f"bits {bits} > 62: packed BIGINT must stay positive")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(p: bytes):
         import numpy as np
 
-        def _h(p) -> int:
-            try:
-                _, _, _, _, frames = _y4m_decode(bytes(p) if p is not None else b"")
-                if len(frames) < bits + 1:
-                    return -1
-                sums = np.array(
-                    [f[0].astype(np.int64).sum() for f in frames[: bits + 1]],
-                    dtype=np.int64,
-                )
-                up = sums[1:] > sums[:-1]
-                return int(
-                    np.sum(np.left_shift(up.astype(np.int64), np.arange(bits)))
-                )
-            except ValueError:
-                return -1
+        _, _, _, _, frames = _y4m_decode(p)
+        if len(frames) < bits + 1:
+            return [(-1,)]
+        sums = np.array(
+            [f[0].astype(np.int64).sum() for f in frames[: bits + 1]],
+            dtype=np.int64,
+        )
+        up = sums[1:] > sums[:-1]
+        return [(int(np.sum(np.left_shift(up.astype(np.int64), np.arange(bits)))),)]
 
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "vfp": b["payload"].map(_h).astype("int64"),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, "media_id long, vfp long"
-    )
+    return map_payloads(media, walk, [(-1,)], "media_id long, vfp long")
 
 
 def audio_energy_fingerprint(
@@ -2732,34 +2675,18 @@ def audio_energy_fingerprint(
         raise ValueError(f"bits {bits} > 62: packed BIGINT must stay positive")
     need = (bits + 1) * chunk_samples
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def walk(p: bytes):
         import numpy as np
 
-        def _h(p) -> int:
-            try:
-                _, _, pcm = _wav_decode(bytes(p) if p is not None else b"")
-                if pcm.shape[0] < need:
-                    return -1
-                x = pcm[:need].astype(np.int64)
-                e = (x * x).sum(axis=1).reshape(bits + 1, chunk_samples).sum(axis=1)
-                up = e[1:] > e[:-1]
-                return int(
-                    np.sum(np.left_shift(up.astype(np.int64), np.arange(bits)))
-                )
-            except ValueError:
-                return -1
+        _, _, pcm = _wav_decode(p)
+        if pcm.shape[0] < need:
+            return [(-1,)]
+        x = pcm[:need].astype(np.int64)
+        e = (x * x).sum(axis=1).reshape(bits + 1, chunk_samples).sum(axis=1)
+        up = e[1:] > e[:-1]
+        return [(int(np.sum(np.left_shift(up.astype(np.int64), np.arange(bits)))),)]
 
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "afp": b["payload"].map(_h).astype("int64"),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, "media_id long, afp long"
-    )
+    return map_payloads(media, walk, [(-1,)], "media_id long, afp long")
 
 
 # --- compressed-audio CONTAINER walks (metadata only, no PCM decode) ----------
@@ -3027,37 +2954,16 @@ def audio_container_meta(media: DataFrame) -> DataFrame:
         "duration_us long, vbr boolean"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    if p[:4] == b"OggS":
-                        m = _ogg_meta(p)
-                    elif p[:3] == b"ID3" or (
-                        len(p) >= 2 and p[0] == 0xFF and (p[1] & 0xE0) == 0xE0
-                    ):
-                        m = _mp3_meta(p)
-                    else:
-                        raise ValueError("unrecognized audio container")
-                except ValueError:
-                    m = {
-                        "codec": "bad", "n_units": 0, "total_samples": 0,
-                        "sample_rate": 0, "channels": 0, "payload_bytes": len(p),
-                        "duration_us": 0, "vbr": False,
-                    }
-                out.append({"media_id": mid, **m})
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "codec", "n_units", "total_samples",
-                    "sample_rate", "channels", "payload_bytes",
-                    "duration_us", "vbr",
-                ],
-            )
+    def walk(p: bytes):
+        if p[:4] == b"OggS":
+            m = _ogg_meta(p)
+        elif p[:3] == b"ID3" or (len(p) >= 2 and p[0] == 0xFF and (p[1] & 0xE0) == 0xE0):
+            m = _mp3_meta(p)
+        else:
+            raise ValueError("unrecognized audio container")
+        return [tuple(m.values())]  # the meta dicts are in schema order
 
-    return media.select("media_id", "payload").mapInPandas(run, schema)
+    return map_payloads(media, walk, [("bad", 0, 0, 0, 0, 0, 0, False)], schema)
 
 
 # --- compressed-video CONTAINER walk (ISO BMFF / MP4, metadata only) ----------
@@ -3242,30 +3148,12 @@ def video_container_meta(media: DataFrame) -> DataFrame:
         "audio_codec string"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                pbytes = bytes(payload) if payload is not None else b""
-                try:
-                    m = _mp4_meta(pbytes)
-                except ValueError:
-                    m = {
-                        "brand": "bad", "timescale": 0, "duration_us": 0,
-                        "n_tracks": 0, "video_codec": "", "width": 0,
-                        "height": 0, "audio_codec": "",
-                    }
-                out.append({"media_id": mid, **m})
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "brand", "timescale", "duration_us",
-                    "n_tracks", "video_codec", "width", "height",
-                    "audio_codec",
-                ],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, schema)
+    return map_payloads(
+        media,
+        lambda p: [tuple(_mp4_meta(p).values())],
+        [("bad", 0, 0, 0, "", 0, 0, "")],
+        schema,
+    )
 
 
 # --- compressed-video CONTAINER walk #2 (Matroska / WebM EBML, metadata only) -
@@ -3467,31 +3355,12 @@ def mkv_container_meta(media: DataFrame) -> DataFrame:
         "width long, height long, audio_codec string, audio_channels long"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                pbytes = bytes(payload) if payload is not None else b""
-                try:
-                    m = _mkv_meta(pbytes)
-                except ValueError:
-                    m = {
-                        "doc_type": "bad", "timestamp_scale_ns": 0,
-                        "duration_us": 0, "n_tracks": 0, "video_codec": "",
-                        "width": 0, "height": 0, "audio_codec": "",
-                        "audio_channels": 0,
-                    }
-                out.append({"media_id": mid, **m})
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "doc_type", "timestamp_scale_ns",
-                    "duration_us", "n_tracks", "video_codec", "width",
-                    "height", "audio_codec", "audio_channels",
-                ],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, schema)
+    return map_payloads(
+        media,
+        lambda p: [tuple(_mkv_meta(p).values())],
+        [("bad", 0, 0, 0, "", 0, 0, "", 0)],
+        schema,
+    )
 
 
 # --- ID3v2 text frames (mp3 tag metadata, no audio decode) --------------------
@@ -3640,34 +3509,11 @@ def mp3_id3_tags(media: DataFrame) -> DataFrame:
     empty strings; malformed tags take the bad-record row."""
     schema = "media_id long, title string, artist string, album string, ok boolean"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                pbytes = bytes(payload) if payload is not None else b""
-                try:
-                    fr = _id3v2_frames(pbytes)
-                    out.append(
-                        {
-                            "media_id": mid,
-                            "title": fr.get("TIT2", ""),
-                            "artist": fr.get("TPE1", ""),
-                            "album": fr.get("TALB", ""),
-                            "ok": True,
-                        }
-                    )
-                except ValueError:
-                    out.append(
-                        {
-                            "media_id": mid, "title": "", "artist": "",
-                            "album": "", "ok": False,
-                        }
-                    )
-            yield pd.DataFrame(
-                out, columns=["media_id", "title", "artist", "album", "ok"]
-            )
+    def walk(p: bytes):
+        fr = _id3v2_frames(p)
+        return [(fr.get("TIT2", ""), fr.get("TPE1", ""), fr.get("TALB", ""), True)]
 
-    return media.select("media_id", "payload").mapInPandas(run, schema)
+    return map_payloads(media, walk, [("", "", "", False)], schema)
 
 
 def id3_album_art(media: DataFrame) -> DataFrame:
@@ -3681,20 +3527,9 @@ def id3_album_art(media: DataFrame) -> DataFrame:
     corrupt file must not kill a corpus pass)."""
     schema = "media_id long, art binary, ok boolean"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                pbytes = bytes(payload) if payload is not None else b""
-                try:
-                    out.append(
-                        {"media_id": mid, "art": _id3v2_apic(pbytes), "ok": True}
-                    )
-                except ValueError:
-                    out.append({"media_id": mid, "art": None, "ok": False})
-            yield pd.DataFrame(out, columns=["media_id", "art", "ok"])
-
-    return media.select("media_id", "payload").mapInPandas(run, schema)
+    return map_payloads(
+        media, lambda p: [(_id3v2_apic(p), True)], [(None, False)], schema
+    )
 
 
 # --- image: JPEG EXIF (APP1 / TIFF-IFD) metadata walk --------------------------
@@ -3896,13 +3731,6 @@ def _exif_meta(p: bytes) -> dict:
     }
 
 
-_EXIF_COLS = [
-    "endian", "make", "model", "orientation", "datetime",
-    "exposure_num", "exposure_den", "fnumber_num", "fnumber_den",
-    "iso", "pix_x", "pix_y",
-]
-
-
 def image_exif_meta(media: DataFrame) -> DataFrame:
     """Typed camera metadata columns from JPEG EXIF APP1 segments, no
     pixel decode anywhere (the exiftool tier beside the container
@@ -3916,19 +3744,9 @@ def image_exif_meta(media: DataFrame) -> DataFrame:
         "exposure_den long, fnumber_num long, fnumber_den long, "
         "iso long, pix_x long, pix_y long"
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    m = _exif_meta(p)
-                except ValueError:
-                    m = {c: ("bad" if c == "endian" else "" if c in
-                             ("make", "model", "datetime") else 0)
-                         for c in _EXIF_COLS}
-                out.append({"media_id": mid, **m})
-            yield pd.DataFrame(out, columns=["media_id", *_EXIF_COLS])
-
-    return media.select("media_id", "payload").mapInPandas(run, schema)
+    return map_payloads(
+        media,
+        lambda p: [tuple(_exif_meta(p).values())],
+        [("bad", "", "", 0, "", 0, 0, 0, 0, 0, 0, 0)],
+        schema,
+    )

@@ -8,6 +8,7 @@ driver records a rows-only check (generator queries).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,21 +25,66 @@ from hadoop_main_spark.streaming.windows import (
 )
 
 
-def _codec_ids(spark: SparkSession, sf: str) -> DataFrame:
-    """doc_id spine for the media-generator queries, repartitioned to
-    the session's default parallelism BEFORE the Python codec kernels:
-    the sf0.1 fixture is ONE parquet file, so without this every
-    encode/decode pass ran as a single task on one core (caught by the
-    r7 10x scale gate — gif_frame_features grew only 1.1x on 10x data
-    because it was parallelism-starved, not fast). Shuffling the
-    8-byte ids is ~free next to the codec work, and decoupling kernel
-    parallelism from input file layout is the same move you'd make at
-    100 TB (payloads are generated downstream; only ids cross the
-    exchange)."""
+def _codec_spine(spark: SparkSession, sf: str, *cols: str) -> DataFrame:
+    """doc_id (+ ``cols``) spine for the media-generator queries,
+    repartitioned to the session's default parallelism BEFORE the
+    Python codec kernels: the sf0.1 fixture is ONE parquet file, so
+    without this every encode/decode pass ran as a single task on one
+    core (caught by the r7 10x scale gate — gif_frame_features grew
+    only 1.1x on 10x data because it was parallelism-starved, not
+    fast). Shuffling the 8-byte ids is ~free next to the codec work,
+    and decoupling kernel parallelism from input file layout is the
+    same move you'd make at 100 TB (payloads are generated downstream
+    by MM.encode_media; only the spine crosses the exchange)."""
     return (
         t(spark, sf, "documents")
-        .select("doc_id")
+        .select("doc_id", *cols)
         .repartition(spark.sparkContext.defaultParallelism)
+    )
+
+
+def _bands(feats: DataFrame, name: str) -> DataFrame:
+    """extract_features output -> one (media_id, band, ``name``) row
+    per features element."""
+    return feats.select(
+        "media_id", F.posexplode("features").alias("band", name)
+    ).select("media_id", F.col("band").cast("long").alias("band"), name)
+
+
+# Encoders shared by twin queries come from factories: a nested
+# function pickles by value, while a module-level one here would make
+# every Python worker import the plan modules.
+
+
+def _ramp_png():
+    """doc i -> a gray PNG with MIXED scanline filters, (i%12+4) rows
+    x (i%16+4) cols, pixel row r = (i*31 + r) % 256."""
+
+    def encode(i: int) -> bytes:
+        h, w = i % 12 + 4, i % 16 + 4
+        col = ((i * 31 + np.arange(h)) % 256).astype(np.uint8)
+        return MM._png_encode(np.repeat(col[:, None], w, axis=1), row_filter="mixed")
+
+    return encode
+
+
+def _class_png():
+    """doc i -> a 14x18 gray PNG of class i % 40 plus a per-doc
+    uniform brightness shift (i % 7) * 4."""
+
+    def encode(i: int) -> bytes:
+        cls, shift = i % 40, (i % 7) * 4
+        r, c = np.arange(14)[:, None], np.arange(18)[None, :]
+        arr = ((cls * 17 + r * 3 + c * 5) % 200 + shift).astype(np.uint8)
+        return MM._png_encode(arr, row_filter="mixed")
+
+    return encode
+
+
+def _pdf_media(spark: SparkSession, sf: str, writer) -> DataFrame:
+    """One PDF per doc, ``writer(text)`` over the doc's text."""
+    return MM.encode_media(
+        _codec_spine(spark, sf, "text"), lambda _i, text: writer(text or "")
     )
 
 
@@ -83,7 +129,7 @@ def pipe_wordcount(spark: SparkSession, sf: str) -> DataFrame:
     FROM documents
     """,
     doc="Multimodal payload plumbing: binary payload column + typed "
-    "metadata, feature extraction via Arrow-batched mapInPandas (stub "
+    "metadata, feature extraction via Arrow-batched map_payloads (stub "
     "decoder); byte-length and digest verified against the oracle.",
 )
 def multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
@@ -119,30 +165,8 @@ def multimodal_meta(spark: SparkSession, sf: str) -> DataFrame:
     "verified.",
 )
 def png_decode_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = i % 12 + 4, i % 16 + 4
-                col = ((i * 31 + np.arange(h)) % 256).astype(np.uint8)
-                payloads.append(
-                    MM._png_encode(np.repeat(col[:, None], w, axis=1), row_filter="mixed")
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = MM.extract_features(media, decoder="png", dim=4)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("band", "gray_mean")
-    ).select("media_id", F.col("band").cast("long").alias("band"), "gray_mean")
+    media = MM.encode_media(_codec_spine(spark, sf), _ramp_png())
+    return _bands(MM.extract_features(media, decoder="png", dim=4), "gray_mean")
 
 
 @query(
@@ -168,33 +192,18 @@ def png_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     "the full marker-walk + Huffman + IDCT path is what is verified.",
 )
 def jpeg_decode_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    def encode(i: int) -> bytes:
+        wb = i % 3 + 1
+        arr = np.zeros((32, 8 * wb), dtype=np.uint8)
+        for r in range(4):
+            for c in range(wb):
+                arr[r * 8 : r * 8 + 8, c * 8 : c * 8 + 8] = (
+                    i * 37 + r * 11 + c * 53
+                ) % 256
+        return MM._jpeg_encode(arr, quality=100)
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                wb = i % 3 + 1
-                arr = np.zeros((32, 8 * wb), dtype=np.uint8)
-                for r in range(4):
-                    for c in range(wb):
-                        arr[r * 8 : r * 8 + 8, c * 8 : c * 8 + 8] = (
-                            i * 37 + r * 11 + c * 53
-                        ) % 256
-                payloads.append(MM._jpeg_encode(arr, quality=100))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = MM.extract_features(media, decoder="jpeg", dim=4)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("band", "gray_mean")
-    ).select("media_id", F.col("band").cast("long").alias("band"), "gray_mean")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
+    return _bands(MM.extract_features(media, decoder="jpeg", dim=4), "gray_mean")
 
 
 @query(
@@ -319,36 +328,21 @@ def frame_sample(spark: SparkSession, sf: str) -> DataFrame:
     "shuffle — frames never leave the Arrow batch.",
 )
 def y4m_frame_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    def encode(i: int) -> bytes:
+        w, h, nf = (i % 4 + 2) * 2, (i % 3 + 2) * 2, i % 6 + 4
+        r, c = np.arange(h)[:, None], np.arange(w)[None, :]
+        r2, c2 = np.arange(h // 2)[:, None], np.arange(w // 2)[None, :]
+        frames = [
+            (
+                ((i * 7 + fi * 31 + r * 5 + c * 3) % 256).astype(np.uint8),
+                ((i * 11 + fi * 17 + r2 * 3 + c2 * 5) % 256).astype(np.uint8),
+                ((i * 13 + fi * 19 + r2 * 7 + c2 * 2) % 256).astype(np.uint8),
+            )
+            for fi in range(nf)
+        ]
+        return MM._y4m_encode(frames, colorspace="C420jpeg")
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h, nf = (i % 4 + 2) * 2, (i % 3 + 2) * 2, i % 6 + 4
-                r = np.arange(h)[:, None]
-                c = np.arange(w)[None, :]
-                r2 = np.arange(h // 2)[:, None]
-                c2 = np.arange(w // 2)[None, :]
-                frames = []
-                for fi in range(nf):
-                    frames.append(
-                        (
-                            ((i * 7 + fi * 31 + r * 5 + c * 3) % 256).astype(np.uint8),
-                            ((i * 11 + fi * 17 + r2 * 3 + c2 * 5) % 256).astype(np.uint8),
-                            ((i * 13 + fi * 19 + r2 * 7 + c2 * 2) % 256).astype(np.uint8),
-                        )
-                    )
-                payloads.append(MM._y4m_encode(frames, colorspace="C420jpeg"))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
     return MM.frame_sample(media, every_n=2).select(
         "media_id", "frame_idx", "width", "height", "y_mean", "cb_mean", "cr_mean"
     )
@@ -384,32 +378,19 @@ def y4m_frame_features(spark: SparkSession, sf: str) -> DataFrame:
     "frame summaries shuffle.",
 )
 def avi_mjpeg_frame_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    def encode(i: int) -> bytes:
+        frames = []
+        for fi in range(i % 5 + 3):
+            arr = np.zeros((16, 16), dtype=np.uint8)
+            for r in range(2):
+                for c in range(2):
+                    arr[r * 8 : r * 8 + 8, c * 8 : c * 8 + 8] = (
+                        i * 29 + fi * 41 + r * 13 + c * 7
+                    ) % 256
+            frames.append(MM._jpeg_encode(arr, quality=100))
+        return MM._avi_mjpeg_encode(frames, 16, 16)
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                nf = i % 5 + 3
-                frames = []
-                for fi in range(nf):
-                    arr = np.zeros((16, 16), dtype=np.uint8)
-                    for r in range(2):
-                        for c in range(2):
-                            arr[r * 8 : r * 8 + 8, c * 8 : c * 8 + 8] = (
-                                i * 29 + fi * 41 + r * 13 + c * 7
-                            ) % 256
-                    frames.append(MM._jpeg_encode(arr, quality=100))
-                payloads.append(MM._avi_mjpeg_encode(frames, 16, 16))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
     return MM.avi_frame_sample(media, every_n=2).select(
         "media_id", "frame_idx", "width", "height", "ch", "px_mean"
     )
@@ -447,30 +428,18 @@ def avi_mjpeg_frame_features(spark: SparkSession, sf: str) -> DataFrame:
     bench=True,  # r7 rotation: tracks the multimodal decode path's perf
 )
 def gif_frame_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    pal = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
 
-    docs = _codec_ids(spark, sf)
+    def encode(i: int) -> bytes:
+        w, h, nf = i % 4 + 4, i % 5 + 3, i % 4 + 2
+        r, c = np.arange(h)[:, None], np.arange(w)[None, :]
+        frames = [
+            ((i * 5 + fi * 23 + r * 11 + c * 3) % 256).astype(np.uint8)
+            for fi in range(nf)
+        ]
+        return MM._gif_encode(frames, pal, interlace=bool(i % 2))
 
-    def gen(batches):
-        import numpy as np
-
-        pal = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h, nf = i % 4 + 4, i % 5 + 3, i % 4 + 2
-                r = np.arange(h)[:, None]
-                c = np.arange(w)[None, :]
-                frames = [
-                    ((i * 5 + fi * 23 + r * 11 + c * 3) % 256).astype(np.uint8)
-                    for fi in range(nf)
-                ]
-                payloads.append(MM._gif_encode(frames, pal, interlace=bool(i % 2)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
     return MM.gif_frame_sample(media, every_n=2).select(
         "media_id", "frame_idx", "width", "height", "r_mean"
     )
@@ -512,35 +481,19 @@ def gif_frame_features(spark: SparkSession, sf: str) -> DataFrame:
     "Integer sums in double are exact — bit-exact match.",
 )
 def bmp_decode_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    gray_pal = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
 
-    docs = _codec_ids(spark, sf)
+    def encode(i: int) -> bytes:
+        w, h = i % 6 + 3, i % 4 + 4
+        v = (
+            (i * 19 + np.arange(h)[:, None] * 5 + np.arange(w)[None, :] * 3) % 256
+        ).astype(np.uint8)
+        if i % 2:  # 8-bit palette layout
+            return MM._bmp_encode(v, palette=gray_pal)
+        return MM._bmp_encode(np.repeat(v[:, :, None], 3, 2))  # 24-bit BGR layout
 
-    def gen(batches):
-        import numpy as np
-
-        gray_pal = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 6 + 3, i % 4 + 4
-                v = (
-                    (i * 19 + np.arange(h)[:, None] * 5 + np.arange(w)[None, :] * 3)
-                    % 256
-                ).astype(np.uint8)
-                if i % 2:  # 8-bit palette layout
-                    payloads.append(MM._bmp_encode(v, palette=gray_pal))
-                else:  # 24-bit BGR layout
-                    payloads.append(MM._bmp_encode(np.repeat(v[:, :, None], 3, 2)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = MM.extract_features(media, decoder="bmp", dim=4)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("band", "gray_mean")
-    ).select("media_id", F.col("band").cast("long").alias("band"), "gray_mean")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
+    return _bands(MM.extract_features(media, decoder="bmp", dim=4), "gray_mean")
 
 
 @query(
@@ -572,30 +525,14 @@ def bmp_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     "Sums are bounded integers in double (exact) — bit-exact match.",
 )
 def flac_decode_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    from hadoop_main_spark.operators.flac import encode_flac
 
-    docs = _codec_ids(spark, sf)
+    def encode(i: int) -> bytes:
+        s = ((i * 17 + np.arange(i % 60 + 50) * 11) % 3001 - 1500).astype(np.int16)
+        return encode_flac(s, 8000, block_size=32)
 
-    def gen(batches):
-        import numpy as np
-
-        from hadoop_main_spark.operators.flac import encode_flac
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 60 + 50
-                s = ((i * 17 + np.arange(n) * 11) % 3001 - 1500).astype(np.int16)
-                payloads.append(encode_flac(s, 8000, block_size=32))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = MM.extract_features(media, decoder="flac", dim=4)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("band", "amp_mean")
-    ).select("media_id", F.col("band").cast("long").alias("band"), "amp_mean")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
+    return _bands(MM.extract_features(media, decoder="flac", dim=4), "amp_mean")
 
 
 @query(
@@ -633,34 +570,16 @@ def flac_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     "verified.",
 )
 def tiff_decode_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    def encode(i: int) -> bytes:
+        w, h = i % 5 + 4, i % 7 + 5
+        v = (
+            (i * 23 + np.arange(h)[:, None] * 7 + np.arange(w)[None, :] * 5) % 256
+        ).astype(np.uint8)
+        arr = np.repeat(v[:, :, None], 3, 2) if i % 3 == 0 else v
+        return MM._tiff_encode(arr, big_endian=bool(i % 2), rows_per_strip=3)
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 5 + 4, i % 7 + 5
-                v = (
-                    (i * 23 + np.arange(h)[:, None] * 7 + np.arange(w)[None, :] * 5)
-                    % 256
-                ).astype(np.uint8)
-                arr = np.repeat(v[:, :, None], 3, 2) if i % 3 == 0 else v
-                payloads.append(
-                    MM._tiff_encode(arr, big_endian=bool(i % 2), rows_per_strip=3)
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = MM.extract_features(media, decoder="tiff", dim=4)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("band", "gray_mean")
-    ).select("media_id", F.col("band").cast("long").alias("band"), "gray_mean")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
+    return _bands(MM.extract_features(media, decoder="tiff", dim=4), "gray_mean")
 
 
 @query(
@@ -690,7 +609,7 @@ def cross_format_pixel_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
     import pandas as pd
 
-    docs = _codec_ids(spark, sf)
+    docs = _codec_spine(spark, sf)
 
     def gen_and_digest(batches):
         import numpy as np
@@ -794,7 +713,7 @@ def media_pixel_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
     import pandas as pd
 
-    docs = _codec_ids(spark, sf)
+    docs = _codec_spine(spark, sf)
 
     def gen_and_digest(batches):
         import numpy as np
@@ -857,28 +776,12 @@ def media_pixel_dedup(spark: SparkSession, sf: str) -> DataFrame:
     "match is bit-exact.",
 )
 def wav_decode_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    def encode(i: int) -> bytes:
+        s = ((i * 13 + np.arange(i % 50 + 40) * 7) % 4001 - 2000).astype("<i2")
+        return MM._wav_encode(8000, s[:, None])
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 50 + 40
-                s = ((i * 13 + np.arange(n) * 7) % 4001 - 2000).astype("<i2")
-                payloads.append(MM._wav_encode(8000, s[:, None]))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = MM.extract_features(media, decoder="wav", dim=4)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("band", "amp_mean")
-    ).select("media_id", F.col("band").cast("long").alias("band"), "amp_mean")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
+    return _bands(MM.extract_features(media, decoder="wav", dim=4), "amp_mean")
 
 
 @query(
@@ -933,7 +836,7 @@ def wav_decode_features(spark: SparkSession, sf: str) -> DataFrame:
 def wav_g711_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
 
-    docs = _codec_ids(spark, sf)
+    docs = _codec_spine(spark, sf)
 
     def gen(batches):
         import numpy as np
@@ -951,10 +854,7 @@ def wav_g711_decode_features(spark: SparkSession, sf: str) -> DataFrame:
             yield pd.DataFrame({"media_id": out_ids, "payload": payloads})
 
     media = docs.mapInPandas(gen, "media_id long, payload binary")
-    feats = MM.extract_features(media, decoder="wav", dim=4)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("band", "amp_mean")
-    ).select("media_id", F.col("band").cast("long").alias("band"), "amp_mean")
+    return _bands(MM.extract_features(media, decoder="wav", dim=4), "amp_mean")
 
 
 @query(
@@ -988,26 +888,7 @@ def wav_g711_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     "shuffles.",
 )
 def image_dhash_dup_groups(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                cls, shift = i % 40, (i % 7) * 4
-                r = np.arange(14)[:, None]
-                c = np.arange(18)[None, :]
-                arr = ((cls * 17 + r * 3 + c * 5) % 200 + shift).astype(np.uint8)
-                payloads.append(MM._png_encode(arr, row_filter="mixed"))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = MM.encode_media(_codec_spine(spark, sf), _class_png())
     dh = MM.image_dhash(media, decoder="png")
     return dh.groupBy("dhash").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -1046,33 +927,13 @@ def image_dhash_dup_groups(spark: SparkSession, sf: str) -> DataFrame:
     "moves. Only (media_id, dhash) ever shuffles.",
 )
 def id3_apic_art_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                cls, shift = i % 40, (i % 7) * 4
-                r = np.arange(14)[:, None]
-                c = np.arange(18)[None, :]
-                arr = ((cls * 17 + r * 3 + c * 5) % 200 + shift).astype(np.uint8)
-                png = MM._png_encode(arr, row_filter="mixed")
-                payloads.append(
-                    MM._id3v2_build(
-                        {"TIT2": f"track {i}"},
-                        ver=3 if i % 2 else 4,
-                        apic=png,
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    png = _class_png()
+    media = MM.encode_media(
+        _codec_spine(spark, sf),
+        lambda i: MM._id3v2_build(
+            {"TIT2": f"track {i}"}, ver=3 if i % 2 else 4, apic=png(i)
+        ),
+    )
     art = MM.id3_album_art(media).filter(
         F.col("ok") & F.col("art").isNotNull()
     ).select("media_id", F.col("art").alias("payload"))
@@ -1497,32 +1358,19 @@ def distcp_roundtrip_agg(spark: SparkSession, sf: str) -> DataFrame:
     "channel means in closed form.",
 )
 def gif_truecolor_frame_features(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    def encode(i: int) -> bytes:
+        w, h, nf = i % 5 + 4, i % 3 + 5, i % 3 + 3
+        rr, cc = np.arange(h)[:, None], np.arange(w)[None, :]
+        frames = []
+        for f in range(nf):
+            a = np.empty((h, w, 3), np.uint8)
+            a[:, :, 0] = (i * 7 + f * 31) % 256
+            a[:, :, 1] = (rr * 17 + cc) % 256
+            a[:, :, 2] = (i * 3 + rr + f) % 256
+            frames.append(a)
+        return MM._gif_encode_rgb(frames)
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h, nf = i % 5 + 4, i % 3 + 5, i % 3 + 3
-                rr = np.arange(h)[:, None]
-                cc = np.arange(w)[None, :]
-                frames = []
-                for f in range(nf):
-                    a = np.empty((h, w, 3), np.uint8)
-                    a[:, :, 0] = (i * 7 + f * 31) % 256
-                    a[:, :, 1] = (rr * 17 + cc) % 256
-                    a[:, :, 2] = (i * 3 + rr + f) % 256
-                    frames.append(a)
-                payloads.append(MM._gif_encode_rgb(frames))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
     return MM.gif_frame_sample(media, every_n=2).select(
         "media_id", "frame_idx", "width", "height", "r_mean", "g_mean", "b_mean"
     )
@@ -1657,74 +1505,64 @@ def stream_dedup_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "recomputes every field in closed form.",
 )
 def audio_container_meta(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
-    docs = _codec_ids(spark, sf)
     BR3 = [32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320]
     RATES = [44100, 48000, 32000]
 
-    def gen(batches):
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                j = i // 2
-                if i % 2 == 0:  # mp3
-                    rate_idx = j % 3
-                    rate = RATES[rate_idx]
-                    mode = 3 if i % 8 == 0 else 0
-                    nf, vary = j % 4 + 2, j % 2
-                    out = bytearray()
-                    if i % 4 == 0:  # ID3v2 prefix (skipped by walker)
-                        sz = i % 23
-                        out += b"ID3\x04\x00\x00" + bytes([0, 0, sz >> 7, sz & 0x7F])
-                        out += b"\x00" * sz
-                    for f in range(nf):
-                        bidx = (j + f * vary) % 14 + 1
-                        pad = (j + f) % 2
-                        h = (
-                            (0x7FF << 21) | (3 << 19) | (1 << 17) | (1 << 16)
-                            | (bidx << 12) | (rate_idx << 10) | (pad << 9)
-                            | (mode << 6)
-                        )
-                        flen = 144000 * BR3[bidx - 1] // rate + pad
-                        out += h.to_bytes(4, "big") + b"\x00" * (flen - 4)
-                    if i % 8 == 4:  # ID3v1 trailer (also skipped)
-                        out += b"TAG" + b"\x00" * 125
-                    payloads.append(bytes(out))
-                else:  # ogg
-                    npages, psize = j % 3 + 1, i % 40 + 5
-                    channels = j % 2 + 1
-                    serial = 0x5EED0000 + i
-                    if i % 4 == 1:  # opus
-                        pre_skip = 312 + i % 5
-                        step = 960 * (j % 4 + 1)
-                        head = (
-                            b"OpusHead" + bytes([1, channels])
-                            + pre_skip.to_bytes(2, "little")
-                            + (48000).to_bytes(4, "little") + b"\x00\x00\x00"
-                        )
-                        grans = [pre_skip + step * (pg + 1) for pg in range(npages)]
-                    else:  # vorbis
-                        rate = RATES[j % 3]
-                        head = (
-                            b"\x01vorbis" + b"\x00" * 4 + bytes([channels])
-                            + rate.to_bytes(4, "little") + b"\x00" * 14
-                        )
-                        grans = [(rate // 100) * (pg + 1) for pg in range(npages)]
-                    out = MM._ogg_page(0, serial, 0, head, header_type=2)
-                    for pg in range(npages):
-                        body = bytes((pg * 31 + k) % 251 for k in range(psize))
-                        out += MM._ogg_page(
-                            grans[pg], serial, pg + 1, body,
-                            header_type=4 if pg == npages - 1 else 0,
-                        )
-                    payloads.append(out)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i: int) -> bytes:
+        j = i // 2
+        if i % 2 == 0:  # mp3
+            rate_idx = j % 3
+            rate = RATES[rate_idx]
+            mode = 3 if i % 8 == 0 else 0
+            nf, vary = j % 4 + 2, j % 2
+            out = bytearray()
+            if i % 4 == 0:  # ID3v2 prefix (skipped by walker)
+                sz = i % 23
+                out += b"ID3\x04\x00\x00" + bytes([0, 0, sz >> 7, sz & 0x7F])
+                out += b"\x00" * sz
+            for f in range(nf):
+                bidx = (j + f * vary) % 14 + 1
+                pad = (j + f) % 2
+                h = (
+                    (0x7FF << 21) | (3 << 19) | (1 << 17) | (1 << 16)
+                    | (bidx << 12) | (rate_idx << 10) | (pad << 9)
+                    | (mode << 6)
+                )
+                flen = 144000 * BR3[bidx - 1] // rate + pad
+                out += h.to_bytes(4, "big") + b"\x00" * (flen - 4)
+            if i % 8 == 4:  # ID3v1 trailer (also skipped)
+                out += b"TAG" + b"\x00" * 125
+            return bytes(out)
+        # ogg
+        npages, psize = j % 3 + 1, i % 40 + 5
+        channels = j % 2 + 1
+        serial = 0x5EED0000 + i
+        if i % 4 == 1:  # opus
+            pre_skip = 312 + i % 5
+            step = 960 * (j % 4 + 1)
+            head = (
+                b"OpusHead" + bytes([1, channels])
+                + pre_skip.to_bytes(2, "little")
+                + (48000).to_bytes(4, "little") + b"\x00\x00\x00"
+            )
+            grans = [pre_skip + step * (pg + 1) for pg in range(npages)]
+        else:  # vorbis
+            rate = RATES[j % 3]
+            head = (
+                b"\x01vorbis" + b"\x00" * 4 + bytes([channels])
+                + rate.to_bytes(4, "little") + b"\x00" * 14
+            )
+            grans = [(rate // 100) * (pg + 1) for pg in range(npages)]
+        out = MM._ogg_page(0, serial, 0, head, header_type=2)
+        for pg in range(npages):
+            body = bytes((pg * 31 + k) % 251 for k in range(psize))
+            out += MM._ogg_page(
+                grans[pg], serial, pg + 1, body,
+                header_type=4 if pg == npages - 1 else 0,
+            )
+        return out
 
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return MM.audio_container_meta(media)
+    return MM.audio_container_meta(MM.encode_media(_codec_spine(spark, sf), encode))
 
 
 def _time_quartiles(df: DataFrame, ts_col: str) -> list[DataFrame]:
@@ -2110,39 +1948,24 @@ def stream_upsert_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "closed form including the integer-exact duration_us floor.",
 )
 def video_container_meta(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    def encode(i: int) -> bytes:
+        ts = [600, 1000, 90000][i % 3]
+        tracks = [
+            (
+                b"vide",
+                [b"avc1", b"hev1", b"vp09"][i % 3],
+                160 * (i % 4 + 1),
+                90 * (i % 4 + 1),
+            )
+        ]
+        if i % 2 == 0:
+            tracks.append((b"soun", b"mp4a", 0, 0))
+        return MM._mp4_build(
+            ["isom", "mp42", "qt  "][i % 3], ts, ts * (i % 7 + 1) + i % 5, tracks,
+            mvhd_v1=(i % 2 == 1), trailing_mdat=i % 33,
+        )
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                brand = ["isom", "mp42", "qt  "][i % 3]
-                ts = [600, 1000, 90000][i % 3]
-                duration = ts * (i % 7 + 1) + i % 5
-                tracks = [
-                    (
-                        b"vide",
-                        [b"avc1", b"hev1", b"vp09"][i % 3],
-                        160 * (i % 4 + 1),
-                        90 * (i % 4 + 1),
-                    )
-                ]
-                if i % 2 == 0:
-                    tracks.append((b"soun", b"mp4a", 0, 0))
-                payloads.append(
-                    MM._mp4_build(
-                        brand, ts, duration, tracks,
-                        mvhd_v1=(i % 2 == 1), trailing_mdat=i % 33,
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return MM.video_container_meta(media)
+    return MM.video_container_meta(MM.encode_media(_codec_spine(spark, sf), encode))
 
 
 @query(
@@ -2189,41 +2012,27 @@ def video_container_meta(spark: SparkSession, sf: str) -> DataFrame:
     "recomputes every field in closed form.",
 )
 def mkv_container_meta(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    def encode(i: int) -> bytes:
+        tracks = []
+        if i % 3 != 2:
+            tracks.append(
+                (1, ["V_VP9", "V_MPEG4/ISO/AVC"][i % 2],
+                 320 + 16 * (i % 8), 240 + 8 * (i % 8), 0)
+            )
+        if i % 2 == 0:
+            tracks.append(
+                (2, "A_OPUS" if i % 4 == 0 else "A_VORBIS", 0, 0, i % 7 + 1)
+            )
+        return MM._mkv_build(
+            ["webm", "matroska"][i % 2],
+            [1_000_000, 100_000, 20_000][i % 3],
+            float((i % 9 + 1) * 100),
+            tracks,
+            unknown_segment_size=(i % 5 == 0),
+            cluster_bytes=i % 77,
+        )
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                tracks = []
-                if i % 3 != 2:
-                    tracks.append(
-                        (1, ["V_VP9", "V_MPEG4/ISO/AVC"][i % 2],
-                         320 + 16 * (i % 8), 240 + 8 * (i % 8), 0)
-                    )
-                if i % 2 == 0:
-                    tracks.append(
-                        (2, "A_OPUS" if i % 4 == 0 else "A_VORBIS",
-                         0, 0, i % 7 + 1)
-                    )
-                payloads.append(
-                    MM._mkv_build(
-                        ["webm", "matroska"][i % 2],
-                        [1_000_000, 100_000, 20_000][i % 3],
-                        float((i % 9 + 1) * 100),
-                        tracks,
-                        unknown_segment_size=(i % 5 == 0),
-                        cluster_bytes=i % 77,
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return MM.mkv_container_meta(media)
+    return MM.mkv_container_meta(MM.encode_media(_codec_spine(spark, sf), encode))
 
 
 #: the WARC/HTML fixture template, defined ONCE for both warc queries
@@ -2268,48 +2077,34 @@ def _warc_media(spark: SparkSession, sf: str) -> DataFrame:
     response whose HTTP body is the HTML template over the doc's
     text); odd docs use the Common Crawl gzip-member-per-record
     layout."""
-    import pandas as pd
-
     from hadoop_main_spark.sources import warc as W
 
-    docs = t(spark, sf, "documents").select("doc_id", "text").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    def encode(i: int, text: str | None) -> bytes:
+        uri = f"http://example.org/doc/{i}"
+        html = _warc_html(i, text or "")
+        recs = [
+            dict(
+                warc_type="warcinfo",
+                block=b"software: hadoop-main-spark\r\n",
+                content_type="application/warc-fields",
+            ),
+            dict(
+                warc_type="request", block=W.http_request(uri),
+                target_uri=uri,
+                content_type="application/http; msgtype=request",
+            ),
+            dict(
+                warc_type="response",
+                # every 4th doc ships the body CHUNKED — the wire form
+                # real crawls actually contain
+                block=W.http_response(html.encode("utf-8"), chunked=(i % 4 == 2)),
+                target_uri=uri,
+                content_type="application/http; msgtype=response",
+            ),
+        ]
+        return W.build_warc(recs, gzip_members=(i % 2 == 1))
 
-    def gen(batches):
-        for b in batches:
-            out_id, out_p = [], []
-            for i, text in zip(b["doc_id"].astype("int64"), b["text"]):
-                i = int(i)
-                uri = f"http://example.org/doc/{i}"
-                html = _warc_html(i, text if text is not None else "")
-                recs = [
-                    dict(
-                        warc_type="warcinfo",
-                        block=b"software: hadoop-main-spark\r\n",
-                        content_type="application/warc-fields",
-                    ),
-                    dict(
-                        warc_type="request", block=W.http_request(uri),
-                        target_uri=uri,
-                        content_type="application/http; msgtype=request",
-                    ),
-                    dict(
-                        warc_type="response",
-                        # every 4th doc ships the body CHUNKED — the
-                        # wire form real crawls actually contain
-                        block=W.http_response(
-                            html.encode("utf-8"), chunked=(i % 4 == 2)
-                        ),
-                        target_uri=uri,
-                        content_type="application/http; msgtype=response",
-                    ),
-                ]
-                out_id.append(i)
-                out_p.append(W.build_warc(recs, gzip_members=(i % 2 == 1)))
-            yield pd.DataFrame({"media_id": out_id, "payload": out_p})
-
-    return docs.mapInPandas(gen, "media_id long, payload binary")
+    return MM.encode_media(_codec_spine(spark, sf, "text"), encode)
 
 
 # Shared verbatim by warc_ingest_meta (batch) and stream_warc_roundtrip
@@ -2432,28 +2227,9 @@ def warc_ingest_meta(spark: SparkSession, sf: str) -> DataFrame:
     "closed-form hash, the grouping, the banding, and the verify.",
 )
 def dhash_near_groups(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from hadoop_main_spark.operators.dedup import hamming_band_pairs
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                cls, shift = i % 40, (i % 7) * 4
-                r = np.arange(14)[:, None]
-                c = np.arange(18)[None, :]
-                arr = ((cls * 17 + r * 3 + c * 5) % 200 + shift).astype(np.uint8)
-                payloads.append(MM._png_encode(arr, row_filter="mixed"))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = MM.encode_media(_codec_spine(spark, sf), _class_png())
     grp = (
         MM.image_dhash(media, decoder="png")
         .filter(F.col("dhash") >= 0)
@@ -2519,42 +2295,31 @@ def _afp_bit_sql() -> str:
     "bit_count verify in closed form from the shared hash64 salt.",
 )
 def audio_fingerprint_dedup(spark: SparkSession, sf: str) -> DataFrame:
+    from hadoop_main_spark.functions.hashing import hash64_py
     from hadoop_main_spark.operators.dedup import hamming_band_pairs
 
-    docs = _codec_ids(spark, sf)
+    base = {
+        g: np.array(
+            [hash64_py(f"{g}_{b}", "afp") % 2 for b in range(56)], dtype=np.int64
+        )
+        for g in range(25)
+    }
 
-    def gen(batches):
-        import numpy as np
+    def encode(i: int) -> bytes:
+        bits = base[i % 25].copy()
+        if i % 4 != 0:
+            bits[(i * 7) % 16] ^= 1
+        # chunk-constant amplitudes realizing the bit sequence: a_0 =
+        # 200, each bit steps +-1, so E_{c+1} > E_c iff bit_c = 1
+        # (values stay in [144, 256] — positive, and squares are exact
+        # in int64)
+        amps = np.concatenate(
+            [np.array([200], dtype=np.int64), 200 + np.cumsum(2 * bits - 1)]
+        )
+        samples = np.repeat(amps, 8).astype("<i2")
+        return MM._wav_encode(8000, samples[:, None])
 
-        from hadoop_main_spark.functions.hashing import hash64_py
-
-        base = {
-            g: np.array(
-                [hash64_py(f"{g}_{b}", "afp") % 2 for b in range(56)],
-                dtype=np.int64,
-            )
-            for g in range(25)
-        }
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                bits = base[i % 25].copy()
-                if i % 4 != 0:
-                    bits[(i * 7) % 16] ^= 1
-                # chunk-constant amplitudes realizing the bit sequence:
-                # a_0 = 200, each bit steps +-1, so E_{c+1} > E_c iff
-                # bit_c = 1 (values stay in [144, 256] — positive, and
-                # squares are exact in int64)
-                amps = np.concatenate(
-                    [np.array([200], dtype=np.int64), 200 + np.cumsum(2 * bits - 1)]
-                )
-                samples = np.repeat(amps, 8).astype("<i2")
-                payloads.append(MM._wav_encode(8000, samples[:, None]))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
     grp = (
         MM.audio_energy_fingerprint(media)
         .filter(F.col("afp") >= 0)
@@ -2620,43 +2385,30 @@ def _vfp_bit_sql() -> str:
     "the shared hash64 salt.",
 )
 def video_fingerprint_dedup(spark: SparkSession, sf: str) -> DataFrame:
+    from hadoop_main_spark.functions.hashing import hash64_py
     from hadoop_main_spark.operators.dedup import hamming_band_pairs
 
-    docs = _codec_ids(spark, sf)
+    base = {
+        g: np.array(
+            [hash64_py(f"{g}_{b}", "vfp") % 2 for b in range(56)], dtype=np.int64
+        )
+        for g in range(20)
+    }
 
-    def gen(batches):
-        import numpy as np
+    def encode(i: int) -> bytes:
+        bits = base[i % 20].copy()
+        if i % 3 != 0:
+            bits[(i * 11) % 16] ^= 1
+        # constant-luma 8x8 frames realizing the bit sequence: L_0 =
+        # 120, each bit steps +-1 (range [64, 176] fits uint8), so
+        # sum(Y_{f+1}) > sum(Y_f) iff bit_f = 1
+        lum = np.concatenate(
+            [np.array([120], dtype=np.int64), 120 + np.cumsum(2 * bits - 1)]
+        ).astype(np.uint8)
+        frames = [(np.full((8, 8), v, dtype=np.uint8), None, None) for v in lum]
+        return MM._y4m_encode(frames, colorspace="Cmono")
 
-        from hadoop_main_spark.functions.hashing import hash64_py
-
-        base = {
-            g: np.array(
-                [hash64_py(f"{g}_{b}", "vfp") % 2 for b in range(56)],
-                dtype=np.int64,
-            )
-            for g in range(20)
-        }
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                bits = base[i % 20].copy()
-                if i % 3 != 0:
-                    bits[(i * 11) % 16] ^= 1
-                # constant-luma 8x8 frames realizing the bit sequence:
-                # L_0 = 120, each bit steps +-1 (range [64, 176] fits
-                # uint8), so sum(Y_{f+1}) > sum(Y_f) iff bit_f = 1
-                lum = np.concatenate(
-                    [np.array([120], dtype=np.int64), 120 + np.cumsum(2 * bits - 1)]
-                ).astype(np.uint8)
-                frames = [
-                    (np.full((8, 8), v, dtype=np.uint8), None, None) for v in lum
-                ]
-                payloads.append(MM._y4m_encode(frames, colorspace="Cmono"))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = MM.encode_media(_codec_spine(spark, sf), encode)
     grp = (
         MM.video_luma_fingerprint(media)
         .filter(F.col("vfp") >= 0)
@@ -2712,24 +2464,9 @@ _PDF_META_ORACLE = """
     "boundary, cf. multimodal).",
 )
 def pdf_text_extract(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from hadoop_main_spark.sources.pdf import pdf_encode, pdf_meta
 
-    docs = t(spark, sf, "documents").select("doc_id", "text").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-    def gen(batches):
-        for b in batches:
-            ids, payloads = [], []
-            for i, text in zip(b["doc_id"].astype("int64"), b["text"]):
-                ids.append(int(i))
-                payloads.append(pdf_encode(text if text is not None else ""))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return pdf_meta(media).orderBy("media_id")
+    return pdf_meta(_pdf_media(spark, sf, pdf_encode)).orderBy("media_id")
 
 
 @query(
@@ -2768,20 +2505,7 @@ def pdf_text_extract(spark: SparkSession, sf: str) -> DataFrame:
 def pdf15_text_extract(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.sources.pdf import pdf15_encode, pdf_meta
 
-    docs = t(spark, sf, "documents").select("doc_id", "text").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-    def gen(batches):
-        for b in batches:
-            ids, payloads = [], []
-            for i, text in zip(b["doc_id"].astype("int64"), b["text"]):
-                ids.append(int(i))
-                payloads.append(pdf15_encode(text if text is not None else ""))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return pdf_meta(media).select(
+    return pdf_meta(_pdf_media(spark, sf, pdf15_encode)).select(
         "media_id", "n_objects", "n_pages", "n_streams",
         "n_opaque_streams", "text",
     ).orderBy("media_id")
@@ -2801,24 +2525,10 @@ def pdf15_text_extract(spark: SparkSession, sf: str) -> DataFrame:
     "stream-vs-batch walker divergence moves a row.",
 )
 def stream_pdf_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from hadoop_main_spark.sources.pdf import pdf_encode
     from hadoop_main_spark.streaming.windows import pdf_meta_stream
 
-    docs = t(spark, sf, "documents").select("doc_id", "text").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-    def gen(batches):
-        for b in batches:
-            ids, payloads = [], []
-            for i, text in zip(b["doc_id"].astype("int64"), b["text"]):
-                ids.append(int(i))
-                payloads.append(pdf_encode(text if text is not None else ""))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = _pdf_media(spark, sf, pdf_encode)
     base = run_tmpdir("streampdf_")
     waves = [media.filter(F.pmod(F.col("media_id"), F.lit(2)) == w) for w in (0, 1)]
     stream = replay_stream(spark, stage_waves(waves, f"{base}/src"), media.schema)
@@ -3038,29 +2748,17 @@ def warc_html_text_extract(spark: SparkSession, sf: str) -> DataFrame:
     "frames behind the tag stay untouched — zero samples decoded.",
 )
 def mp3_id3_tags(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
+    def encode(i: int) -> bytes:
+        frames = {
+            "TIT2": f"Tïtle {i}",
+            "TPE1": f"Ärtist {i % 13}",
+            "TALB": ["Gold", "Sølv", "Brönze"][i % 3],
+        }
+        tag = MM._id3v2_build(frames, ver=4 if i % 2 == 0 else 3, pad=i % 9)
+        # one dummy audio frame follows the tag (never decoded)
+        return tag + b"\xff\xfb\x90\x00" + b"\x00" * 32
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                frames = {
-                    "TIT2": f"Tïtle {i}",
-                    "TPE1": f"Ärtist {i % 13}",
-                    "TALB": ["Gold", "Sølv", "Brönze"][i % 3],
-                }
-                tag = MM._id3v2_build(frames, ver=4 if i % 2 == 0 else 3,
-                                      pad=i % 9)
-                # one dummy audio frame follows the tag (never decoded)
-                payloads.append(tag + b"\xff\xfb\x90\x00" + b"\x00" * 32)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return MM.mp3_id3_tags(media)
+    return MM.mp3_id3_tags(MM.encode_media(_codec_spine(spark, sf), encode))
 
 
 @query(
@@ -3109,42 +2807,29 @@ def mp3_id3_tags(spark: SparkSession, sf: str) -> DataFrame:
 def image_exif_meta(spark: SparkSession, sf: str) -> DataFrame:
     import datetime
 
-    import numpy as np
-    import pandas as pd
-
-    docs = _codec_ids(spark, sf)
     base_jpeg = MM._jpeg_encode(np.zeros((8, 8), dtype=np.uint8))
     base_date = datetime.date(2024, 1, 1)
 
-    def gen(batches):
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % 37 == 5:  # no APP1 at all -> bad-record path
-                    payloads.append(base_jpeg)
-                    continue
-                d = base_date + datetime.timedelta(days=i % 365)
-                dt = (f"{d:%Y:%m:%d} "
-                      f"{i % 24:02d}:{(i * 7) % 60:02d}:{i % 60:02d}")
-                app1 = MM._exif_app1(
-                    f"Make{i % 5}",
-                    f"Model{i % 11}",
-                    i % 8 + 1,
-                    dt,
-                    (1, i % 500 + 2),
-                    (i % 80 + 10, 10),
-                    100 * (i % 32 + 1),
-                    16 + i % 8,
-                    8 + i % 5,
-                    big_endian=(i % 2 == 1),
-                )
-                payloads.append(base_jpeg[:2] + app1 + base_jpeg[2:])
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i: int) -> bytes:
+        if i % 37 == 5:  # no APP1 at all -> bad-record path
+            return base_jpeg
+        d = base_date + datetime.timedelta(days=i % 365)
+        dt = f"{d:%Y:%m:%d} {i % 24:02d}:{(i * 7) % 60:02d}:{i % 60:02d}"
+        app1 = MM._exif_app1(
+            f"Make{i % 5}",
+            f"Model{i % 11}",
+            i % 8 + 1,
+            dt,
+            (1, i % 500 + 2),
+            (i % 80 + 10, 10),
+            100 * (i % 32 + 1),
+            16 + i % 8,
+            8 + i % 5,
+            big_endian=(i % 2 == 1),
+        )
+        return base_jpeg[:2] + app1 + base_jpeg[2:]
 
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
-    return MM.image_exif_meta(media)
+    return MM.image_exif_meta(MM.encode_media(_codec_spine(spark, sf), encode))
 
 
 @query(
@@ -3196,7 +2881,7 @@ def html_link_graph(spark: SparkSession, sf: str) -> DataFrame:
     from hadoop_main_spark.operators.graph import pagerank_int
     from hadoop_main_spark.operators.html import extract_links
 
-    docs = _codec_ids(spark, sf)
+    docs = _codec_spine(spark, sf)
 
     def gen(batches):
         for b in batches:
@@ -3328,30 +3013,9 @@ def stream_warc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     "divergence moves a row.",
 )
 def stream_media_features_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
     from hadoop_main_spark.streaming.windows import media_features_stream
 
-    docs = _codec_ids(spark, sf)
-
-    def gen(batches):
-        import numpy as np
-
-        for b in batches:
-            ids = b["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                h, w = i % 12 + 4, i % 16 + 4
-                col = ((i * 31 + np.arange(h)) % 256).astype(np.uint8)
-                payloads.append(
-                    MM._png_encode(
-                        np.repeat(col[:, None], w, axis=1), row_filter="mixed"
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = MM.encode_media(_codec_spine(spark, sf), _ramp_png())
     base = run_tmpdir("streammedia_")
     waves = [media.filter(F.pmod(F.col("media_id"), F.lit(2)) == w) for w in (0, 1)]
     stream = replay_stream(spark, stage_waves(waves, f"{base}/src"), media.schema)
@@ -3359,13 +3023,7 @@ def stream_media_features_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         stream, f"{base}/out", f"{base}/ckpt", decoder="png", dim=4
     )
     q.awaitTermination()
-    return (
-        spark.read.parquet(f"{base}/out")
-        .select("media_id", F.posexplode("features").alias("band", "gray_mean"))
-        .select(
-            "media_id", F.col("band").cast("long").alias("band"), "gray_mean"
-        )
-    )
+    return _bands(spark.read.parquet(f"{base}/out"), "gray_mean")
 
 
 def _recrawl_oracle() -> str:

@@ -27,11 +27,10 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from hadoop_main_spark.operators.multimodal import map_payloads
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 _TYPE_RE = re.compile(rb"/Type\s*/(\w+)")
@@ -473,7 +472,7 @@ def pdf15_encode(text: str, chars_per_page: int = 256) -> bytes:
 
 def pdf_meta(media: DataFrame) -> DataFrame:
     """(media_id, payload) -> per-document container metadata + the
-    extracted text (Arrow-batched mapInPandas, the warc_records
+    extracted text (one Arrow-batched map_payloads pass, the warc_records
     shape). Bad payloads take one n_objects=-1 row (the multimodal
     bad-record policy: classify, never crash the corpus pass)."""
     schema = (
@@ -481,29 +480,9 @@ def pdf_meta(media: DataFrame) -> DataFrame:
         "n_opaque_streams long, stream_bytes long, text string"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                pbytes = bytes(payload) if payload is not None else b""
-                try:
-                    r = parse_pdf(pbytes)
-                except ValueError:
-                    out.append(
-                        {
-                            "media_id": mid, "n_objects": -1, "n_pages": 0,
-                            "n_streams": 0, "n_opaque_streams": 0,
-                            "stream_bytes": 0, "text": "",
-                        }
-                    )
-                    continue
-                out.append({"media_id": mid, **r})
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "n_objects", "n_pages", "n_streams",
-                    "n_opaque_streams", "stream_bytes", "text",
-                ],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, schema)
+    return map_payloads(
+        media,
+        lambda p: [tuple(parse_pdf(p).values())],  # dict in schema order
+        [(-1, 0, 0, 0, 0, "")],
+        schema,
+    )

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_main_spark.operators.multimodal import map_payloads
+
 _CRLF = b"\r\n"
 
 
@@ -273,55 +275,21 @@ def warc_records(media: DataFrame) -> DataFrame:
         "refers_to_uri string, payload_digest string"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                pbytes = bytes(payload) if payload is not None else b""
-                try:
-                    recs = parse_warc(pbytes)
-                except ValueError:
-                    out.append(
-                        {
-                            "media_id": mid, "rec_idx": 0, "warc_type": "bad",
-                            "target_uri": "", "content_length": 0,
-                            "http_status": 0, "http_content_type": "",
-                            "body_bytes": 0, "body_md5": "",
-                            "warc_profile": "", "refers_to_uri": "",
-                            "payload_digest": "",
-                        }
-                    )
-                    continue
-                for j, r in enumerate(recs):
-                    # http records report the HTTP BODY (empty for a bare GET);
-                    # non-http records report the raw block
-                    body = r["body"] if r["is_http"] else r["block"]
-                    out.append(
-                        {
-                            "media_id": mid, "rec_idx": j,
-                            "warc_type": r["warc_type"],
-                            "target_uri": r["target_uri"],
-                            "content_length": r["content_length"],
-                            "http_status": r["http_status"],
-                            "http_content_type": r["http_content_type"],
-                            "body_bytes": len(body),
-                            "body_md5": hashlib.md5(body).hexdigest(),
-                            "warc_profile": r["warc_profile"],
-                            "refers_to_uri": r["refers_to_uri"],
-                            "payload_digest": r["payload_digest"],
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "rec_idx", "warc_type", "target_uri",
-                    "content_length", "http_status", "http_content_type",
-                    "body_bytes", "body_md5", "warc_profile",
-                    "refers_to_uri", "payload_digest",
-                ],
+    def walk(p: bytes):
+        for j, r in enumerate(parse_warc(p)):
+            # http records report the HTTP BODY (empty for a bare GET);
+            # non-http records report the raw block
+            body = r["body"] if r["is_http"] else r["block"]
+            yield (
+                j, r["warc_type"], r["target_uri"], r["content_length"],
+                r["http_status"], r["http_content_type"], len(body),
+                hashlib.md5(body).hexdigest(), r["warc_profile"],
+                r["refers_to_uri"], r["payload_digest"],
             )
 
-    return media.select("media_id", "payload").mapInPandas(run, schema)
+    return map_payloads(
+        media, walk, [(0, "bad", "", 0, 0, "", 0, "", "", "", "")], schema
+    )
 
 
 def revisit_warc_media(

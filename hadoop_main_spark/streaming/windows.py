@@ -318,7 +318,7 @@ def media_features_stream(
 ):
     """Streaming multimodal ingest: decode + feature-extract binary
     payloads AS THEY ARRIVE. extract_features is a stateless
-    Arrow-batched mapInPandas, so the SAME operator (and all its real
+    Arrow-batched map_payloads pass, so the SAME operator (and all its real
     codecs — ppm/bmp/tiff/png/jpeg/gif/wav/flac) runs unchanged
     inside Structured Streaming; this wrapper just pairs it with the
     exactly-once parquet file sink. Per-batch output is exactly the

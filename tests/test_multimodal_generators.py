@@ -1616,3 +1616,61 @@ def test_video_luma_fingerprint_bits_and_sentinels(spark):
     assert out[1] == want
     assert out[2] == want
     assert out[3] == -1 and out[4] == -1
+
+
+_BIG = 2**53  # past this, an id that passes through float64 rounds
+_TRUNCATED_ID3 = b"ID3\x04\x00\x00\x7f\x7f\x7f\x7f"  # malformed for every walker
+
+
+def _pdf_meta(media):
+    from hadoop_main_spark.sources.pdf import pdf_meta
+
+    return pdf_meta(media)
+
+
+def _zero_features(p: bytes):
+    import hashlib
+
+    return (len(p), hashlib.md5(p).hexdigest(), [0.0] * 4)
+
+
+@pytest.mark.parametrize(
+    "kernel, null_row, junk_row",
+    [
+        (
+            lambda m: MM.extract_features(m, decoder="png", dim=4),
+            _zero_features(b""),
+            _zero_features(_TRUNCATED_ID3),
+        ),
+        (MM.image_dhash, (-1,), (-1,)),
+        (MM.video_luma_fingerprint, (-1,), (-1,)),
+        (MM.audio_energy_fingerprint, (-1,), (-1,)),
+        (MM.audio_container_meta, ("bad", 0, 0, 0, 0, 0, 0, False), None),
+        (MM.video_container_meta, ("bad", 0, 0, 0, "", 0, 0, ""), None),
+        (MM.mkv_container_meta, ("bad", 0, 0, 0, "", 0, 0, "", 0), None),
+        (MM.mp3_id3_tags, ("", "", "", True), ("", "", "", False)),
+        (MM.id3_album_art, (None, True), (None, False)),
+        (MM.image_exif_meta, ("bad", "", "", 0, "", 0, 0, 0, 0, 0, 0, 0), None),
+        (_pdf_meta, (-1, 0, 0, 0, 0, ""), None),
+    ],
+    ids=[
+        "extract_features", "image_dhash", "video_luma_fingerprint",
+        "audio_energy_fingerprint", "audio_container_meta",
+        "video_container_meta", "mkv_container_meta", "mp3_id3_tags",
+        "id3_album_art", "image_exif_meta", "pdf_meta",
+    ],
+)
+def test_payload_kernels_keep_ids_exact_next_to_null(spark, kernel, null_row, junk_row):
+    """One Arrow batch holding ids past 2^53, a NULL id, a NULL payload
+    and a junk payload: every 1->1 payload kernel returns each id
+    exactly (a pandas id column turns float64 at the first NULL and
+    rounds 2^53+1 to 2^53), and the NULL and junk payloads take the
+    kernel's bad-record row (``junk_row`` None = same as ``null_row``)."""
+    media = spark.createDataFrame(
+        [(_BIG + 1, None), (_BIG + 3, _TRUNCATED_ID3), (None, _TRUNCATED_ID3)],
+        "media_id long, payload binary",
+    ).coalesce(1)
+    rows = {r[0]: tuple(r)[1:] for r in kernel(media).collect()}
+    assert set(rows) == {_BIG + 1, _BIG + 3, None}
+    assert rows[_BIG + 1] == null_row
+    assert rows[_BIG + 3] == (junk_row or null_row)

@@ -851,30 +851,18 @@ def test_media_features_stream_equals_batch(spark, tmp_path):
     micro-batched source) must produce EXACTLY the batch operator's
     rows, including the zeros bad-record path."""
     import numpy as np
-    import pandas as pd
 
     from hadoop_main_spark.operators import multimodal as MM
 
-    def gen(batches):
-        for b in batches:
-            ids = b["media_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % 9 == 0:
-                    payloads.append(b"not a wav")  # bad record
-                else:
-                    n = i % 30 + 20
-                    s = ((i * 13 + np.arange(n) * 7) % 4001 - 2000).astype("<i2")
-                    payloads.append(MM._wav_encode(8000, s[:, None]))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        if i % 9 == 0:
+            return b"not a wav"  # bad record
+        n = i % 30 + 20
+        s = ((i * 13 + np.arange(n) * 7) % 4001 - 2000).astype("<i2")
+        return MM._wav_encode(8000, s[:, None])
 
     src = str(tmp_path / "mediasrc")
-    media = (
-        spark.range(180)
-        .selectExpr("id AS media_id")
-        .mapInPandas(gen, "media_id long, payload binary")
-    )
+    media = MM.encode_media(spark.range(180).selectExpr("id AS media_id"), encode)
     media.repartition(3).write.mode("overwrite").parquet(src)
 
     out, ckpt = str(tmp_path / "feats"), str(tmp_path / "ck")
@@ -1286,36 +1274,26 @@ def test_warc_records_stream_equals_batch(spark, tmp_path):
     warc_records over mixed plain/gzip-member WARC payloads (incl.
     chunked HTTP responses and bad records) must produce EXACTLY the
     batch operator's rows."""
-    import pandas as pd
-
+    from hadoop_main_spark.operators import multimodal as MM
     from hadoop_main_spark.sources import warc as WA
 
-    def gen(batches):
-        for b in batches:
-            ids = b["media_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                if i % 11 == 0:
-                    payloads.append(b"junk, not warc")
-                    continue
-                body = f"<p>doc {i}</p>".encode() * (i % 4 + 1)
-                recs = [
-                    dict(
-                        warc_type="response",
-                        block=WA.http_response(body, chunked=(i % 3 == 0)),
-                        target_uri=f"http://e.org/{i}",
-                        content_type="application/http; msgtype=response",
-                    )
-                ]
-                payloads.append(WA.build_warc(recs, gzip_members=(i % 2 == 1)))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def encode(i):
+        if i % 11 == 0:
+            return b"junk, not warc"
+        body = f"<p>doc {i}</p>".encode() * (i % 4 + 1)
+        recs = [
+            dict(
+                warc_type="response",
+                block=WA.http_response(body, chunked=(i % 3 == 0)),
+                target_uri=f"http://e.org/{i}",
+                content_type="application/http; msgtype=response",
+            )
+        ]
+        return WA.build_warc(recs, gzip_members=(i % 2 == 1))
 
     src = str(tmp_path / "warcsrc")
     (
-        spark.range(120)
-        .selectExpr("id AS media_id")
-        .mapInPandas(gen, "media_id long, payload binary")
+        MM.encode_media(spark.range(120).selectExpr("id AS media_id"), encode)
         .repartition(3)
         .write.mode("overwrite")
         .parquet(src)
