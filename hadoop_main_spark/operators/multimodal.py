@@ -1330,11 +1330,12 @@ def extract_features(
 
 def resize(media: DataFrame, width: int, height: int, decoder: str = "stub") -> DataFrame:
     """Resize as a real Arrow-batched pass: decode -> resample ->
-    re-encode per payload inside mapInPandas (batch shape and schema
-    are the production ones). ``decoder='ppm'`` is a REAL pipeline
-    for binary P6 payloads (numpy header parse + nearest-neighbor
-    resample + re-encode); ``decoder='stub'`` keeps the deterministic
-    byte resample for arbitrary blobs; codec formats raise."""
+    re-encode per payload inside mapInArrow; every other column of
+    ``media`` passes through as Arrow, so ids stay exact.
+    ``decoder='ppm'`` is a REAL pipeline for binary P6 payloads (numpy
+    header parse + nearest-neighbor resample + re-encode);
+    ``decoder='stub'`` keeps the deterministic byte resample for
+    arbitrary blobs; codec formats raise."""
     target = width * height
 
     def _stub_resize(p: bytes) -> bytes:
@@ -1359,8 +1360,6 @@ def resize(media: DataFrame, width: int, height: int, decoder: str = "stub") -> 
             "'ppm'/'png'/'jpeg' are the real no-library paths, 'stub' the fake"
         )
 
-    out_schema = media.schema
-
     def _safe(p) -> bytes:
         # NULL payload = bad record -> empty payload out; a malformed
         # payload under a REAL decoder likewise must not kill the task
@@ -1368,27 +1367,25 @@ def resize(media: DataFrame, width: int, height: int, decoder: str = "stub") -> 
         if p is None:
             return b""
         try:
-            return payload_fn(bytes(p))
+            return payload_fn(p)
         except ValueError:
             return b""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
+        import pyarrow as pa
+
         for b in batches:
-            b = b.copy()
-            b["payload"] = b["payload"].map(_safe)
-            b["meta_width"] = width
-            b["meta_height"] = height
-            yield b
+            new = {
+                "payload": pa.array([_safe(p) for p in b.column("payload").to_pylist()]),
+                "meta_width": pa.array([width] * b.num_rows),
+                "meta_height": pa.array([height] * b.num_rows),
+            }
+            yield pa.RecordBatch.from_arrays(
+                [new[f.name].cast(f.type) if f.name in new else b.column(f.name) for f in b.schema],
+                names=b.schema.names,
+            )
 
-    return media.mapInPandas(run, out_schema)
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Metadata-only variant (no payload rewrite) — kept for cheap
-    schema tests."""
-    return media.withColumn("meta_width", F.lit(width).cast("long")).withColumn(
-        "meta_height", F.lit(height).cast("long")
-    )
+    return media.mapInArrow(run, media.schema)
 
 
 def frame_sample_stub(media: DataFrame, every_n: int = 10) -> DataFrame:
@@ -2508,9 +2505,9 @@ def audio_resample(
 ) -> DataFrame:
     """Audio resampling plumbing: decode payload to PCM samples,
     rate-convert, report sample counts + output digest — the whole
-    pass Arrow-batched in mapInPandas (one Python worker round trip
-    per batch, never per row). ``decoder='wav'`` is a REAL pipeline
-    for RIFF/PCM16 payloads (numpy chunk walk + nearest-sample rate
+    pass Arrow-batched through :func:`map_payloads` (one Python worker
+    round trip per batch, never per row). ``decoder='wav'`` is a REAL
+    pipeline for RIFF/PCM16 payloads (numpy chunk walk + nearest-sample rate
     conversion + re-encode; the source rate comes from the header,
     ``src_rate`` is ignored); ``decoder='stub'`` reads raw bytes as
     headerless int16 PCM at ``src_rate``; compressed codecs raise."""
@@ -2521,17 +2518,10 @@ def audio_resample(
         )
     import hashlib
 
-    def _resample(p) -> tuple[int, int, str]:
-        # null payload = bad record: report zeros instead of killing
-        # the task (one bad row must not fail a 100 TB pass)
-        p = bytes(p) if p is not None else b""
+    def _resample(p: bytes) -> list[tuple[int, int, str]]:
         if decoder == "wav":
-            try:
-                n_in, n_out, enc = _wav_resample_payload(p, dst_rate)
-            except ValueError:
-                # malformed payload = bad record, same zeros policy
-                return 0, 0, hashlib.md5(b"").hexdigest()
-            return n_in, n_out, hashlib.md5(enc).hexdigest()
+            n_in, n_out, enc = _wav_resample_payload(p, dst_rate)
+            return [(n_in, n_out, hashlib.md5(enc).hexdigest())]
         n_in = len(p) // 2
         n_out = (n_in * dst_rate) // src_rate
         # index-mapped nearest-sample pick (stands in for a filter bank)
@@ -2539,21 +2529,11 @@ def audio_resample(
         for i in range(n_out):
             j = (i * n_in) // max(n_out, 1)
             out += p[2 * j : 2 * j + 2]
-        return n_in, n_out, hashlib.md5(bytes(out)).hexdigest()
+        return [(n_in, n_out, hashlib.md5(bytes(out)).hexdigest())]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            trip = b["payload"].map(_resample)
-            yield pd.DataFrame(
-                {
-                    "media_id": b["media_id"],
-                    "n_samples_in": trip.map(lambda t: t[0]).astype("int64"),
-                    "n_samples_out": trip.map(lambda t: t[1]).astype("int64"),
-                    "out_digest": trip.map(lambda t: t[2]),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, AUDIO_SCHEMA)
+    # a NULL (walked as b"") or malformed payload = bad record: zeros
+    # instead of killing the task (one bad row must not fail a 100 TB pass)
+    return map_payloads(media, _resample, [(0, 0, hashlib.md5(b"").hexdigest())], AUDIO_SCHEMA)
 
 
 # --- perceptual image hashing (dHash) -----------------------------------------

@@ -25,12 +25,6 @@ def hash_partition(df: DataFrame, n: int, cols: Sequence[str | Column]) -> DataF
     return df.repartition(n, *[F.col(c) if isinstance(c, str) else c for c in cols])
 
 
-def range_partition(df: DataFrame, n: int, cols: Sequence[str | Column]) -> DataFrame:
-    """Sampled range partitioning — reference: TotalOrderPartitioner +
-    InputSampler (MRC/mapreduce/lib/partition/TotalOrderPartitioner.java:50)."""
-    return df.repartitionByRange(n, *[F.col(c) if isinstance(c, str) else c for c in cols])
-
-
 def key_field_partition(
     df: DataFrame, n: int, line_col: str, fields: Sequence[int], sep: str = "\t"
 ) -> DataFrame:
@@ -53,16 +47,6 @@ def binary_prefix_partition(
     """Partition on a byte/char slice of the key — reference:
     BinaryPartitioner (MRC/mapreduce/lib/partition/BinaryPartitioner.java:1)."""
     return df.repartition(n, F.substring(F.col(col).cast("string"), offset, length))
-
-
-def partition_audit(df: DataFrame) -> DataFrame:
-    """Rows per physical partition (skew inspection helper)."""
-    return (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .agg(F.count("*").alias("rows"))
-        .orderBy("__pid")
-    )
 
 
 def fan_out(df: DataFrame, cols: Sequence[str | Column] | None = None, min_partitions: int | None = None) -> DataFrame:

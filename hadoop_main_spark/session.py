@@ -45,13 +45,41 @@ on local[N] for tests and on a large cluster unchanged:
   runs (the pyspark shell, spark-submit) keeps the flags it was
   started with. Other masters get none: executors run their own JVMs,
   whose flags the deployment owns.
+- On local masters only, the same option also maps a JDK dynamic
+  class-data-sharing (CDS) archive: the ~17k classes (mostly Spark's)
+  a driver loads, parsed and verified, as a ~170 MB file under
+  ``${XDG_CACHE_HOME:-~/.cache}/hadoop_main_spark/cds/``, keyed by the
+  JDK and the name, size and mtime of every Spark jar. On a 4-vCPU
+  host it cut session start from ~10.7 s to ~5.3 s and perfbench's
+  relational ``setup_s`` from 44.5 to 34.5 CPU s (medians of 10
+  alternating pairs; lower in all 10). With no archive under the
+  current key the JVM dumps one as it exits; the next
+  :func:`get_spark` renames a finished dump (its Python process gone,
+  its header written, which the JDK does last) into place and deletes
+  cut-off dumps and archives of other keys. A dumping session waits
+  at exit, up to ``CDS_DUMP_WAIT_S``, for its JVM to finish, so none
+  outlives the process. The JDK maps and dumps nothing with a
+  non-empty directory on the classpath, and the Spark conf dir comes
+  first on it: when that dir holds only ``*.template`` files the JVM
+  launch alone sees ``SPARK_CONF_DIR`` at an empty cache subdirectory
+  (the same configuration); when it holds a real file the driver gets
+  no CDS flags. A missing, stale or corrupt archive is a normal start
+  (``-Xshare:auto``). As with the JIT options, ``extra_conf`` replaces
+  them and a JVM that already runs keeps its flags.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import struct
+import subprocess
 import warnings
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 #: Confs that are safe (and desirable) to apply at runtime on an
@@ -113,6 +141,125 @@ DRIVER_JIT_OPTIONS = (
 #: Directory that contains the ``hadoop_main_spark`` package.
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+#: First bytes of a finished JDK dynamic CDS archive: magic, header CRC,
+#: version. The dump writes its header last, so a cut-off one reads 0.
+CDS_DYNAMIC_MAGIC = 0xF00BABA8
+#: Seconds an exiting Python process waits for its JVM to write the archive.
+CDS_DUMP_WAIT_S = 60
+
+
+def cds_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(base, "hadoop_main_spark", "cds")
+
+
+def java_home() -> str:
+    """The JDK spark-submit runs: ``$JAVA_HOME``, else the one of
+    ``java`` on the PATH."""
+    java = os.environ.get("JAVA_HOME") or os.path.dirname(
+        os.path.dirname(os.path.realpath(shutil.which("java") or "/"))
+    )
+    return os.path.realpath(java)
+
+
+def cds_key(jdk: str, spark_home: str) -> str:
+    """The JDK and every jar on the driver classpath, by name, size and
+    mtime: any change to them names a new archive."""
+    h = hashlib.sha256()
+    st = os.stat(os.path.join(jdk, "lib", "modules"))
+    h.update(f"{jdk}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    jars = os.path.join(spark_home, "jars")
+    for name in sorted(os.listdir(jars)):
+        if name.endswith(".jar"):
+            st = os.stat(os.path.join(jars, name))
+            h.update(f"\0{name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:20]
+
+
+def _archive_complete(path: str) -> bool:
+    with open(path, "rb") as f:
+        head = f.read(12)
+    if len(head) < 12:
+        return False
+    magic, _crc, version = struct.unpack("<IiI", head)
+    return magic == CDS_DYNAMIC_MAGIC and version > 0
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, another user's
+        pass
+    return True
+
+
+def cds_options(cache: str, key: str) -> str:
+    """CDS flags for a driver JVM launched now. First tidies ``cache``:
+    a finished dump under ``key`` whose Python process has exited
+    becomes ``<key>.jsa``; cut-off dumps, other dead dumps and archives
+    under other keys are deleted. Then the JVM maps ``<key>.jsa`` if it
+    is there, else dumps its loaded classes at exit to a temp file of
+    this process."""
+    archive = os.path.join(cache, f"{key}.jsa")
+    for name in os.listdir(cache):
+        path = os.path.join(cache, name)
+        stem, _, pid = name.removesuffix(".tmp").partition(".")
+        if name.endswith(".tmp") and pid.isdigit():
+            if _pid_alive(int(pid)):
+                continue
+            if stem == key and _archive_complete(path):
+                os.replace(path, archive)
+                continue
+        elif not name.endswith(".jsa") or name == f"{key}.jsa":
+            continue
+        os.remove(path)
+    if os.path.exists(archive) and not _archive_complete(archive):
+        os.remove(archive)
+    if os.path.exists(archive):
+        flag = f"-XX:SharedArchiveFile={archive}"
+    else:
+        flag = f"-XX:ArchiveClassesAtExit={cache}/{key}.{os.getpid()}.tmp"
+    # the dump warns once per class it skips, on the JVM's stdout
+    return f"{flag} -Xlog:cds*=off"
+
+
+def driver_cds() -> tuple[str, str] | None:
+    """(CDS flags, empty conf dir) for a local driver JVM, or None when
+    the Spark conf dir holds a real file: the JDK maps and dumps no
+    archive with a non-empty directory on the classpath, and that conf
+    dir comes first on it."""
+    spark_home = _find_spark_home()
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.isdir(conf) and any(not n.endswith(".template") for n in os.listdir(conf)):
+        return None
+    cache = cds_dir()
+    empty_conf = os.path.join(cache, "conf")
+    try:
+        os.makedirs(empty_conf, exist_ok=True)
+        if os.listdir(empty_conf):
+            return None
+        return cds_options(cache, cds_key(java_home(), spark_home)), empty_conf
+    except OSError:
+        # no JDK modules image or jars dir, an unwritable cache, or a
+        # concurrent launch that tidied the same file first: no CDS
+        return None
+
+
+def _await_dump(proc: subprocess.Popen) -> None:
+    """End a dumping JVM before its Python process exits: it writes the
+    archive on the way out, and would otherwise outlive the process."""
+    if proc.poll() is not None:
+        return
+    if proc.stdin and not proc.stdin.closed:
+        proc.stdin.close()  # Spark's gateway exits when stdin closes
+    try:
+        proc.wait(timeout=CDS_DUMP_WAIT_S)
+    except subprocess.TimeoutExpired:
+        proc.kill()  # its temp file keeps a zero header and is deleted later
+        proc.wait()
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -140,17 +287,37 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    cds = None
     if master.startswith("local"):
+        launches = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+        if launches and "spark.driver.extraJavaOptions" not in (extra_conf or {}):
+            cds = driver_cds()
         builder = (
             builder.config("spark.python.daemon.module", "hadoop_main_spark.pydaemon")
             .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
-            .config("spark.driver.extraJavaOptions", DRIVER_JIT_OPTIONS)
+            .config(
+                "spark.driver.extraJavaOptions",
+                f"{DRIVER_JIT_OPTIONS} {cds[0]}" if cds else DRIVER_JIT_OPTIONS,
+            )
         )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    if cds:
+        flags, empty_conf = cds
+        saved = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = empty_conf  # for the JVM launch alone
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            os.environ.pop("SPARK_CONF_DIR")
+            if saved is not None:
+                os.environ["SPARK_CONF_DIR"] = saved
+        if "-XX:ArchiveClassesAtExit=" in flags:
+            atexit.register(_await_dump, SparkContext._gateway.proc)
+    else:
+        spark = builder.getOrCreate()
     tune(spark)
     # re-apply CALLER choices after tune(): tune unconditionally sets
     # the runtime confs and the shuffle size, silently clobbering an

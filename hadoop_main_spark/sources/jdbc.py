@@ -1,48 +1,20 @@
 """JDBC source/sink (SURVEY.md §2.1/2.2: DBInputFormat family).
 
 ``spark.read.jdbc`` with partitionColumn/bounds IS the
-DataDrivenDBInputFormat design (min/max range splits); these
-wrappers add the reference's split-computation semantics for
+DataDrivenDBInputFormat design (min/max range splits); the helpers
+below add the reference's split-computation semantics for
 inspection/testing without a live database, including the
 TextSplitter's base-substring trick.
 
 Reference: MRC/mapreduce/lib/db/DataDrivenDBInputFormat.java:1,
 IntegerSplitter.java:1, TextSplitter.java:1, DBOutputFormat.java:1.
-(No JDBC driver ships in this environment; the read/write wrappers
-are exercised against any URL the deployment provides.)
+(No JDBC driver ships in this environment; the write wrapper is
+exercised against any URL the deployment provides.)
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def read_jdbc_partitioned(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str,
-    lower: int,
-    upper: int,
-    num_partitions: int = 8,
-    **options: str,
-) -> DataFrame:
-    """DataDrivenDBInputFormat: parallel scan split on a numeric
-    column's [min, max] range."""
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("partitionColumn", partition_column)
-        .option("lowerBound", str(lower))
-        .option("upperBound", str(upper))
-        .option("numPartitions", str(num_partitions))
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
+from pyspark.sql import DataFrame
 
 
 def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append", **options: str) -> None:
@@ -72,17 +44,6 @@ def integer_splits(lo: int, hi: int, n: int) -> list[tuple[int, int]]:
         out.append((cur, cur + size))
         cur += size
     return out
-
-
-def date_splits(lo: _dt.date, hi: _dt.date, n: int) -> list[tuple[_dt.date, _dt.date]]:
-    """DateSplitter: day-resolution range splits."""
-    return [
-        (lo + _dt.timedelta(days=a - 0), lo + _dt.timedelta(days=b - 0))
-        for a, b in [
-            (s - _dt.date.toordinal(lo), e - _dt.date.toordinal(lo))
-            for s, e in integer_splits(lo.toordinal(), hi.toordinal(), n)
-        ]
-    ]
 
 
 _ALPHABET = "abcdefghijklmnopqrstuvwxyz"

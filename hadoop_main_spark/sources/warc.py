@@ -22,9 +22,6 @@ per member), so the same parser serves .warc and .warc.gz.
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -352,33 +349,41 @@ def revisit_warc_media(
 
     schema = f"{id_col} long, payload binary"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, payloads = [], []
-            for mid, uri, payload, prior in zip(
-                b[id_col], b[uri_col], b[payload_col], b["__prior"]
-            ):
-                pbytes = bytes(payload) if payload is not None else b""
-                digest = hashlib.md5(pbytes).hexdigest()
-                if prior is not None and prior == digest:
-                    rec = dict(
-                        warc_type="revisit",
-                        block=b"",
-                        target_uri=str(uri),
-                        profile=REVISIT_PROFILE,
-                        refers_to_uri=str(uri),
-                        payload_digest=f"md5:{digest}",
-                    )
-                else:
-                    rec = dict(
-                        warc_type="response",
-                        block=http_response(pbytes),
-                        target_uri=str(uri),
-                        content_type="application/http; msgtype=response",
-                        payload_digest=f"md5:{digest}",
-                    )
-                ids.append(mid)
-                payloads.append(build_warc([rec]))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def record(uri, payload, prior) -> bytes:
+        pbytes = payload if payload is not None else b""
+        digest = hashlib.md5(pbytes).hexdigest()
+        if prior is not None and prior == digest:
+            rec = dict(
+                warc_type="revisit",
+                block=b"",
+                target_uri=str(uri),
+                profile=REVISIT_PROFILE,
+                refers_to_uri=str(uri),
+                payload_digest=f"md5:{digest}",
+            )
+        else:
+            rec = dict(
+                warc_type="response",
+                block=http_response(pbytes),
+                target_uri=str(uri),
+                content_type="application/http; msgtype=response",
+                payload_digest=f"md5:{digest}",
+            )
+        return build_warc([rec])
 
-    return joined.mapInPandas(run, schema)
+    def run(batches):
+        import pyarrow as pa
+
+        # ids pass through as Arrow: a pandas id column next to a NULL
+        # id would turn float64 and round every id past 2^53
+        for b in batches:
+            cols = (b.column(c).to_pylist() for c in (uri_col, payload_col, "__prior"))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(id_col).cast(pa.int64()),
+                    pa.array([record(*r) for r in zip(*cols)], pa.binary()),
+                ],
+                names=[id_col, "payload"],
+            )
+
+    return joined.mapInArrow(run, schema)

@@ -1634,6 +1634,28 @@ def _zero_features(p: bytes):
     return (len(p), hashlib.md5(p).hexdigest(), [0.0] * 4)
 
 
+def _md5(p: bytes) -> str:
+    import hashlib
+
+    return hashlib.md5(p).hexdigest()
+
+
+def _resize_ppm(media):
+    meta = F.lit(0).cast("long")
+    media = media.withColumn("meta_width", meta).withColumn("meta_height", meta)
+    return MM.resize(media, 2, 3, decoder="ppm")
+
+
+def _revisit_records(media):
+    from hadoop_main_spark.sources.warc import revisit_warc_media, warc_records
+
+    crawl = media.withColumn("uri", F.lit("http://a/"))
+    prior = media.sparkSession.createDataFrame([], "uri string, digest string")
+    return warc_records(revisit_warc_media(crawl, prior)).select(
+        "media_id", "warc_type", "payload_digest"
+    )
+
+
 @pytest.mark.parametrize(
     "kernel, null_row, junk_row",
     [
@@ -1652,12 +1674,24 @@ def _zero_features(p: bytes):
         (MM.id3_album_art, (None, True), (None, False)),
         (MM.image_exif_meta, ("bad", "", "", 0, "", 0, 0, 0, 0, 0, 0, 0), None),
         (_pdf_meta, (-1, 0, 0, 0, 0, ""), None),
+        (_resize_ppm, (b"", 2, 3), None),
+        (
+            lambda m: MM.audio_resample(m, decoder="wav"),
+            (0, 0, _md5(b"")),
+            None,
+        ),
+        (
+            _revisit_records,
+            ("response", f"md5:{_md5(b'')}"),
+            ("response", f"md5:{_md5(_TRUNCATED_ID3)}"),
+        ),
     ],
     ids=[
         "extract_features", "image_dhash", "video_luma_fingerprint",
         "audio_energy_fingerprint", "audio_container_meta",
         "video_container_meta", "mkv_container_meta", "mp3_id3_tags",
-        "id3_album_art", "image_exif_meta", "pdf_meta",
+        "id3_album_art", "image_exif_meta", "pdf_meta", "resize",
+        "audio_resample", "revisit_warc_media",
     ],
 )
 def test_payload_kernels_keep_ids_exact_next_to_null(spark, kernel, null_row, junk_row):
